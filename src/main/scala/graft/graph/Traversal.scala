@@ -52,19 +52,21 @@ object Traversal {
     else graft.functions.MemoStats.recordBuild()
     memo.getOrElseUpdate(edges, {
       if (memo.size > 64) {
-        memo.values.foreach { f =>
-          try if (!f.sparkSession.sparkContext.isStopped)
-            f.queryExecution.analyzed.collectFirst {
-              case lr: org.apache.spark.sql.execution.LogicalRDD =>
-                lr.rdd.unpersist(false)
-            }
-          catch { case _: Exception => () }
-        }
+        memo.values.foreach(Ranking.releaseRound)
         memo.clear()
       }
       build
     })
   }
+
+  /** Drop every prepared projection memoized for `edges` and unpersist
+    * its checkpoint blocks — the release point for an owner that is
+    * about to unpersist the edge frame itself (an engine's `close()`),
+    * so the projections do not stay live until 64 newer entries push
+    * them out. */
+  private[graft] def release(edges: DataFrame): Unit =
+    Seq(prepMemo, revPrepMemo, prepDistinctMemo, dstPrepDistinctMemo)
+      .foreach(_.remove(edges).foreach(Ranking.releaseRound))
 
   private[graph] def srcPrepared(edges: DataFrame): DataFrame =
     memoPrepared(prepMemo, edges) {

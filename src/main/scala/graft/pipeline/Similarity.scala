@@ -463,31 +463,14 @@ object Similarity {
   private def quantize(v: Column): Column =
     transform(v, x => round(x * 1000000).cast("long"))
 
-  /** 8-bit LSH bucket from random-hyperplane sign bits. Projections
-    * are exact long dots over the 1e6-quantized vector (integer plane
-    * weights), so the sign test is order-independent and bit-identical
-    * across engines — no rounding boundary to land on. */
-  def lshBucket(emb: DataFrame, planes: Int = 8): DataFrame = {
-    val v = withNorm(emb)
-    // one fused primitive loop (VectorOps.LshBandSignature, bands=1):
-    // the zip_with/aggregate form allocated two interpreted
-    // intermediate arrays per (vector, plane). Bit-identical buckets:
-    // same integer plane weights, same >0 sign test, null vector →
-    // bucket 0 exactly as the when(...).otherwise(0) chain produced.
-    val flat: Seq[Long] =
-      (0 until planes).flatMap(j => (1 to 64).map(i1 => planeWeightValue(j, i1)))
-    v.withColumn("bucket",
-      element_at(VectorOps.lshBandSignature(col("qv"), flat, 1, planes), 1))
-  }
-
   /** D7 LSH-bucketed ANN: exact cosine within each bucket only,
     * top-k per query among same-bucket candidates. At scale the
     * bucket id is the shuffle key; bucket population is ~n/2^planes.
     */
   def lshTopK(emb: DataFrame, k: Int = 3,
       queryPred: Column = lit(true)): DataFrame = {
-    // (vec_id, qv, nrm, bucket) materialized ONCE: the live
-    // lshBucket chain re-derived the interpreted quantize transform
+    // (vec_id, qv, nrm, bucket) materialized ONCE: an unmaterialized
+    // bucket chain re-derived the interpreted quantize transform
     // from the parquet scan inside every consumer branch (both join
     // sides and the query-side filter — 4 copies in the r15 plan);
     // after materialization every stage is codegen over primitive
