@@ -152,6 +152,12 @@ object TextOps {
       stamps.remove(key.asInstanceOf[K])
       sizes.remove(key.asInstanceOf[K])
     }
+    /** Drop `key`'s entry: the frame it held, if any. */
+    def remove(key: K): Option[DataFrame] = {
+      val f = frames.get(key)
+      drop(key)
+      f
+    }
     /** Non-building lookup: lets a measured dispatch choose its plan
       * based on whether a sibling query ALREADY paid for the shared
       * frame, without forcing the build itself (the D4b prefix join

@@ -68,6 +68,14 @@ object Ranking {
         .distinct().localCheckpoint(true)
     }
 
+  /** Drop every frame memoized for `edges` here — its node set, its
+    * distinct edges and its oriented adjacency — and unpersist their
+    * checkpoint blocks: the release point for an owner that is about
+    * to unpersist the edge frame itself (an engine's `close()`). */
+  private[graft] def release(edges: DataFrame): Unit =
+    Seq(nodesMemo, simpleEdgesMemo, orientedAdjMemo)
+      .foreach(_.remove(edges).foreach(releaseRound))
+
   /** PageRank in FIXED-POINT integer arithmetic: ranks are
     * parts-per-million longs (sp₀ = 10⁶ ≙ the n-scaled rank 1.0), the
     * per-edge contribution is integer floor division `pr div outdeg`,
@@ -310,7 +318,7 @@ object Ranking {
     * just-removed nodes), so after the one up-front exchange each
     * wave ships only the removed-node frame. */
   private def symEdges(edges: DataFrame): DataFrame = {
-    val und = undEdges(edges)
+    val und = undirected(edges)
     und.select(col("a").as("u"), col("b").as("v"))
       .unionByName(und.select(col("b").as("u"), col("a").as("v")))
       .repartition(
@@ -319,9 +327,11 @@ object Ranking {
   }
 
   /** Distinct undirected (a < b) edge frame from a raw src/dst one:
-    * self-loops dropped, duplicates and reversals collapsed — the
-    * single normalization every undirected operator shares. */
-  private def undEdges(edges: DataFrame): DataFrame =
+    * self-loops dropped, duplicates and reversals collapsed — THE
+    * single normalization every undirected operator shares (peel,
+    * supports, squares, the triangle family), so the oracle's shared
+    * u0 CTE has exactly one Spark twin to drift against. */
+  private def undirected(edges: DataFrame): DataFrame =
     edges
       .select(col("src").cast("long").as("s"), col("dst").cast("long").as("t"))
       .filter(col("s") =!= col("t"))
@@ -388,8 +398,8 @@ object Ranking {
     * cohesion, not just degree). Bounded peel like [[kCoreBounded]]:
     * each round recomputes per-edge support as |N(a) ∩ N(b)| over
     * sorted distinct-neighbor arrays (the [[triangleCount]] edge-
-    * iterator shape — one edge⋈adjacency join and a codegen
-    * array_intersect, never a wedge-enumeration shuffle), drops edges
+    * iterator shape — one edge⋈adjacency join and the native sorted
+    * intersect, never a wedge-enumeration shuffle), drops edges
     * below k−2, and early-exits on an unchanged edge count (peeling
     * only removes edges, so a fixpoint round is a no-op and the
     * result equals the oracle's full unrolled budget). Support is
@@ -441,8 +451,8 @@ object Ranking {
 
   /** Per-edge triangle support |N(a) ∩ N(b)| over an undirected
     * (a < b) edge frame — the [[triangleCount]] edge-iterator shape:
-    * one adjacency-array build, one edge⋈adjacency join, a codegen
-    * array_intersect per edge. Shared by [[kTrussBounded]] and
+    * one adjacency-array build, one edge⋈adjacency join, a native
+    * sorted-merge intersect per edge. Shared by [[kTrussBounded]] and
     * [[weakTies]]. */
   /** Per-edge shuffle volume of the adjacency⋈edges join is
     * Σ(deg_a+deg_b) longs — ~11 GB on the 6M-edge organic sf1 graph,
@@ -522,7 +532,7 @@ object Ranking {
     * memoizes it per (session, dir), like the CALLS edge cache), so
     * the O(Σdeg²) intersect pass is paid once, not per query. */
   def edgeSupportIndex(edges: DataFrame): DataFrame =
-    edgeSupports(undEdges(edges))
+    edgeSupports(undirected(edges))
 
   def weakTies(edges: DataFrame): DataFrame =
     weakTiesFromSupports(edgeSupportIndex(edges).localCheckpoint(true))
@@ -542,7 +552,7 @@ object Ranking {
   /** Supports for a SUBSET of the surviving edge set: adjacency
     * arrays are built only for the subset's endpoints (over the full
     * surviving graph `und`, so the counts are exact), then the same
-    * codegen array_intersect as [[edgeSupports]]. The incremental
+    * sorted-merge intersect as [[edgeSupports]]. The incremental
     * peel's workhorse — a wave that removes e edges re-measures
     * O(e·deg) edges, not all of them. */
   private[graft] def probeSupportsFor(und: DataFrame, sub: DataFrame): DataFrame =
@@ -697,18 +707,6 @@ object Ranking {
     sup.orderBy("a", "b")
   }
 
-  /** Triangle count via degree-ordered orientation (the standard
-    * MapReduce-era trick): orient every undirected edge from the
-    * (degree, id)-smaller endpoint to the larger, so each triangle is
-    * counted exactly once at its lowest-degree base edge and candidate
-    * work is bounded O(m^1.5) — a hub of degree 10⁶ generates no
-    * wedges at all. Counting is the sorted-adjacency EDGE ITERATOR:
-    * each oriented node ships its sorted out-neighbor array once, and
-    * per edge (x,y) the triangle count is |N⁺(x) ∩ N⁺(y)| via a
-    * codegen'd array_intersect — one edge⋈adjacency join instead of
-    * materializing the wedge set (measured ~3× over the 3-way wedge
-    * join at sf0.1). Returns one (n_triangles) row.
-    */
   /** Approximate betweenness centrality: Brandes' algorithm (2001)
     * from a SAMPLED source set, truncated at `maxDepth` (Riondato-
     * Kornaropoulos-style bounded sampling — the standard scale
@@ -897,50 +895,72 @@ object Ranking {
       .orderBy("node")
   }
 
-  /** Distinct undirected non-loop edge set (a < b) — THE shared input
-    * of every undirected-structure metric below (triangles, wedges,
-    * degrees, assortativity); one definition so the oracle's shared
-    * u0/dg CTEs have exactly one Spark twin to drift against. */
-  private def undirected(edges: DataFrame): DataFrame =
-    edges
-      .select(col("src").cast("long").as("s"), col("dst").cast("long").as("t"))
-      .filter(col("s") =!= col("t"))
-      .select(least(col("s"), col("t")).as("a"), greatest(col("s"), col("t")).as("b"))
-      .distinct()
+  /** The triangle family's one shared artifact, memoized per INPUT
+    * edge frame (identity-keyed, like [[nodesOf]]): node-keyed
+    * (n, d, nbrs) over [[undirected]] edges, `d` the undirected degree
+    * and `nbrs` the sorted out-neighbours under THE degree
+    * orientation — every undirected edge points from its lower
+    * (degree, id) end to its higher one. Each triangle is then seen
+    * exactly once, from its lowest end, and the orientation bounds
+    * every out-array by O(√m) however skewed the raw degrees. A node
+    * with no out-neighbour carries an empty array. Triangles, wedges,
+    * local clustering, assortativity, k_nn(d) and the rich club all
+    * read this one frame, so an edge frame pays for the orientation
+    * once however many of them run on it. */
+  private val orientedAdjMemo = new graft.functions.TextOps.FrameMemo
+  private[graft] def orientedAdjOf(edges: DataFrame): DataFrame =
+    orientedAdjMemo.getOrBuild(edges) {
+      val und = undirected(edges)
+      val deg = und.select(col("a").as("n")).unionByName(und.select(col("b").as("n")))
+        .groupBy("n").agg(count(lit(1)).as("d"))
+      val aFirst = col("da") < col("db") || (col("da") === col("db") && col("a") < col("b"))
+      val adj = und
+        .join(deg.select(col("n").as("a"), col("d").as("da")), "a")
+        .join(deg.select(col("n").as("b"), col("d").as("db")), "b")
+        .select(when(aFirst, col("a")).otherwise(col("b")).as("n"),
+          when(aFirst, col("b")).otherwise(col("a")).as("y"))
+        .groupBy("n").agg(sort_array(collect_list(col("y"))).as("nbrs"))
+      deg.join(adj, Seq("n"), "left")
+        .select(col("n"), col("d"),
+          coalesce(col("nbrs"), typedLit(Array.empty[Long])).as("nbrs"))
+        .localCheckpoint(true)
+    }
 
-  /** Undirected degree table (n, d) over [[undirected]] edges. */
-  private def degreesOf(und: DataFrame): DataFrame =
-    und.select(col("a").as("n")).unionByName(und.select(col("b").as("n")))
-      .groupBy("n").agg(count(lit(1)).as("d"))
-
-  def triangleCount(edges: DataFrame): DataFrame = {
-    val und = undirected(edges)
-    val deg = degreesOf(und)
-    val o = und
-      .join(deg.select(col("n").as("na"), col("d").as("da")), col("a") === col("na"))
-      .join(deg.select(col("n").as("nb"), col("d").as("db")), col("b") === col("nb"))
-      .select(
-        when(col("da") < col("db") || (col("da") === col("db") && col("a") < col("b")),
-          col("a")).otherwise(col("b")).as("x"),
-        when(col("da") < col("db") || (col("da") === col("db") && col("a") < col("b")),
-          col("b")).otherwise(col("a")).as("y"))
-      .localCheckpoint(true)
-    val adj = o.groupBy(col("x").as("n"))
-      .agg(sort_array(collect_list(col("y"))).as("nbrs"))
-    o.join(adj.select(col("n").as("jx"), col("nbrs").as("nx")), col("x") === col("jx"))
-      .join(adj.select(col("n").as("jy"), col("nbrs").as("ny")), col("y") === col("jy"))
-      .agg(coalesce(sum(size(array_intersect(col("nx"), col("ny")))), lit(0L))
-        .cast("long").as("n_triangles"))
+  /** Every undirected edge exactly once, as its oriented form
+    * (x, dx, nx, y, dy, ny): [[orientedAdjOf]] exploded on its
+    * out-arrays and joined back to itself on the head `y` — one join
+    * over one materialized frame. */
+  private def orientedEdges(edges: DataFrame): DataFrame = {
+    val adj = orientedAdjOf(edges)
+    adj.select(col("n").as("x"), col("d").as("dx"), col("nbrs").as("nx"),
+        explode(col("nbrs")).as("y"))
+      .join(adj.select(col("n").as("y"), col("d").as("dy"), col("nbrs").as("ny")), "y")
   }
 
+  /** Triangle count via degree-ordered orientation (the standard
+    * MapReduce-era trick): [[orientedAdjOf]] orients every undirected
+    * edge from its (degree, id)-smaller end to the larger, so each
+    * triangle is counted exactly once, at its lowest end, and
+    * candidate work is bounded O(m^1.5) — a hub of degree 10⁶
+    * generates no wedges at all. Counting is the sorted-adjacency EDGE
+    * ITERATOR: per oriented edge x→y the count is |N⁺(x) ∩ N⁺(y)| by
+    * the native sorted-merge intersect
+    * ([[graft.functions.VectorOps.sortedIntersectCount]]) over the two
+    * sorted out-arrays — one explode⋈adjacency join over the memoized
+    * frame, never the wedge set. Returns one (n_triangles) row. */
+  def triangleCount(edges: DataFrame): DataFrame =
+    orientedEdges(edges)
+      .agg(coalesce(sum(graft.functions.VectorOps.sortedIntersectCount(
+          col("nx"), col("ny"))), lit(0L))
+        .cast("long").as("n_triangles"))
+
   /** Global clustering coefficient: 3·triangles / wedges, both counted
-    * exactly — triangles by the degree-ordered [[triangleCount]]
-    * machinery (O(m^1.5)), wedges as the closed form Σ d(d−1)/2 over
-    * undirected degrees (one narrow degree agg, no path enumeration).
-    * The ratio is an exact integer ppm floor division; two 1-row
-    * frames cross-join at the end. */
+    * exactly — triangles by [[triangleCount]], wedges as the closed
+    * form Σ d(d−1)/2 over the degrees [[orientedAdjOf]] carries (no
+    * path enumeration). The ratio is an exact integer ppm floor
+    * division; two 1-row frames cross-join at the end. */
   def clusteringCoefficient(edges: DataFrame): DataFrame = {
-    val wedges = degreesOf(undirected(edges))
+    val wedges = orientedAdjOf(edges)
       .agg(coalesce(sum(col("d") * (col("d") - 1)), lit(0L)).as("w2"))
       // true integer halving — `/` on longs routes through a double,
       // which rounds above 2^53 (the oracle's `// 2` never does)
@@ -952,23 +972,23 @@ object Ranking {
           .as("clustering_ppm"))
   }
 
+  /** Both orientations of every undirected edge as (x, y) endpoint
+    * degrees — 2m edge ends whose x and y marginals are identical. */
+  private def degreeEnds(edges: DataFrame): DataFrame = {
+    val ends = orientedEdges(edges).select(col("dx").as("x"), col("dy").as("y"))
+    ends.unionByName(ends.select(col("y").as("x"), col("x").as("y")))
+  }
+
   /** Degree assortativity (Newman 2002): Pearson correlation of
     * endpoint degrees over edge ends. Both ORIENTATIONS of every
-    * undirected edge contribute one (deg u, deg v) sample, which makes
-    * the x and y marginals identical — so r reduces to
-    * (n·Σxy − (Σx)²) / (n·Σx² − (Σx)²) with EVERY sum an exact long;
-    * the single float operation is the final divide, floor-form
-    * rounded at 6dp. Two degree joins + one 1-row aggregate. */
-  def assortativity(edges: DataFrame): DataFrame = {
-    val und = undirected(edges)
-    val deg = degreesOf(und)
-      .localCheckpoint(true) // joined twice below; degree table is node-sized
-    val ends = und
-      .join(deg.select(col("n").as("na"), col("d").as("da")), col("a") === col("na"))
-      .join(deg.select(col("n").as("nb"), col("d").as("db")), col("b") === col("nb"))
-      .select(col("da").as("x"), col("db").as("y"))
-    val both = ends.unionByName(ends.select(col("y").as("x"), col("x").as("y")))
-    both.agg(count(lit(1)).as("n"), sum(col("x")).as("sx"),
+    * undirected edge contribute one (deg u, deg v) sample
+    * ([[degreeEnds]]), which makes the x and y marginals identical — so
+    * r reduces to (n·Σxy − (Σx)²) / (n·Σx² − (Σx)²) with EVERY sum an
+    * exact long; the single float operation is the final divide,
+    * floor-form rounded at 6dp. One 1-row aggregate. */
+  def assortativity(edges: DataFrame): DataFrame =
+    degreeEnds(edges)
+      .agg(count(lit(1)).as("n"), sum(col("x")).as("sx"),
         sum(col("x") * col("x")).as("sxx"), sum(col("x") * col("y")).as("sxy"))
       .select(col("n").as("n_ends"),
         (col("n") * col("sxy") - col("sx") * col("sx")).as("num"),
@@ -978,7 +998,6 @@ object Ranking {
           graft.functions.Rounding.rnd(
             col("num").cast("double") / col("den").cast("double"), 6))
           .as("assortativity"))
-  }
 
   /** Bounded closeness centrality over a start sample: for each start,
     * n_reach = |out-ball(depth ≤ maxDepth)| and sum_dist = Σ min-depth
@@ -1182,11 +1201,7 @@ object Ranking {
     * One capped self-join on the middle key + one pair agg + a
     * 1-row rollup. */
   def squareCount(edges: DataFrame, hubCap: Int = 100): DataFrame = {
-    val und = edges
-      .select(col("src").cast("long").as("s"), col("dst").cast("long").as("t"))
-      .filter(col("s") =!= col("t"))
-      .select(least(col("s"), col("t")).as("a"), greatest(col("s"), col("t")).as("b"))
-      .distinct()
+    val und = undirected(edges)
     val nb = und.select(col("a").as("node"), col("b").as("z"))
       .unionByName(und.select(col("b").as("node"), col("a").as("z")))
       .localCheckpoint(true)
@@ -1369,8 +1384,8 @@ object Ranking {
     * hubs preferentially wire to each other — on a call graph, a
     * dispatcher core.
     *
-    * Plan shape: one undirected distinct edge frame + one degree agg
-    * (the triangle/assortativity machinery), then BOTH ladder counts
+    * Plan shape: the triangle family's [[orientedAdjOf]] frame (one
+    * undirected distinct edge set + its degrees), then BOTH ladder counts
     * come from tiny pre-aggregated histograms — nodes collapse to
     * (degree → count) and edges to (min-end-degree → count) BEFORE
     * the ladder join, so the k-ladder multiplies histogram rows, not
@@ -1381,20 +1396,10 @@ object Ranking {
   def richClub(edges: DataFrame, ks: Seq[Int] = Seq(1, 2, 4, 8, 16, 32)): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val u0 = edges
-      .select(least(col("src"), col("dst")).cast("long").as("a"),
-        greatest(col("src"), col("dst")).cast("long").as("b"))
-      .filter(col("a") =!= col("b")).distinct()
-      .localCheckpoint(true)
-    val dg = u0.select(col("a").as("n")).unionByName(u0.select(col("b").as("n")))
-      .groupBy("n").agg(count(lit(1)).as("d"))
-      .localCheckpoint(true)
-    // histograms: (d → n_nodes) and (min(da,db) → n_edges) — ≤ d_max rows
-    val nodeHist = dg.groupBy("d").agg(count(lit(1)).as("nn"))
-    val edgeHist = u0
-      .join(dg.select(col("n").as("a2"), col("d").as("da")), col("a") === col("a2"))
-      .join(dg.select(col("n").as("b2"), col("d").as("db")), col("b") === col("b2"))
-      .select(least(col("da"), col("db")).as("me"))
+    // histograms: (d → n_nodes) and (min(dx,dy) → n_edges) — ≤ d_max rows
+    val nodeHist = orientedAdjOf(edges).groupBy("d").agg(count(lit(1)).as("nn"))
+    val edgeHist = orientedEdges(edges)
+      .select(least(col("dx"), col("dy")).as("me"))
       .groupBy("me").agg(count(lit(1)).as("ne"))
     val ladder = ks.toDF("k")
     ladder.join(broadcast(nodeHist), col("d") > col("k"), "left")
@@ -1577,22 +1582,14 @@ object Ranking {
     * (10⁶·Σd_nbr div n_ends, DECIMAL(38,0)-widened). A falling curve
     * = hubs wire to leaves (disassortative callgraph plumbing), flat
     * = no degree correlation. Same both-orientations end frame as
-    * C19 — one edge scan + two degree joins + a d_max-row agg. */
-  def neighborDegreeCurve(edges: DataFrame): DataFrame = {
-    val und = undirected(edges)
-    val deg = degreesOf(und).localCheckpoint(true)
-    val ends = und
-      .join(deg.select(col("n").as("na"), col("d").as("da")), col("a") === col("na"))
-      .join(deg.select(col("n").as("nb"), col("d").as("db")), col("b") === col("nb"))
-      .select(col("da").as("x"), col("db").as("y"))
-    val both = ends.unionByName(ends.select(col("y").as("x"), col("x").as("y")))
-    both.groupBy(col("x").as("degree"))
+    * C19 ([[degreeEnds]]) + a d_max-row agg. */
+  def neighborDegreeCurve(edges: DataFrame): DataFrame =
+    degreeEnds(edges).groupBy(col("x").as("degree"))
       .agg(count(lit(1)).as("n_ends"), sum(col("y")).as("sum_nbr"))
       .select(col("degree"), col("n_ends"),
         expr("""CAST((CAST(1000000 AS DECIMAL(38,0)) * sum_nbr) div n_ends
                AS BIGINT)""").as("knn_ppm"))
       .orderBy("degree")
-  }
 
   /** Per-node local clustering coefficient (Watts–Strogatz 1998):
     * for every node with undirected degree d ≥ 2,
@@ -1600,41 +1597,23 @@ object Ranking {
     * triangles through v — the per-node refinement of the global
     * C18 coefficient (which this shares all machinery with).
     *
-    * Triangles come from the degree-ordered edge-iterator (the C8
-    * orientation): each triangle materializes exactly ONCE as an
-    * (x, y, w) row via explode(array_intersect) over sorted
-    * higher-ordered adjacency arrays, so the exploded frame is
-    * exactly 3·#triangles rows — never a wedge enumeration, and the
-    * orientation bounds every adjacency array by O(√m) however
-    * skewed the raw degrees. Per-node counts are one narrow
+    * Triangles come from the degree-ordered edge iterator over
+    * [[orientedAdjOf]]: each triangle materializes exactly ONCE as an
+    * (x, y, w) row via explode(array_intersect) over the two sorted
+    * out-arrays, so the exploded frame is exactly 3·#triangles rows —
+    * never a wedge enumeration. Per-node counts are one narrow
     * union+agg over those rows; 2·10⁶·t and d·(d−1) ride
     * DECIMAL(38,0) (hub degrees square past a long at 100 TB — the
     * rich-club widening). */
   def localClustering(edges: DataFrame): DataFrame = {
-    val und = undirected(edges)
-    val deg = degreesOf(und).localCheckpoint(true)
-    val o = und
-      .join(deg.select(col("n").as("na"), col("d").as("da")), col("a") === col("na"))
-      .join(deg.select(col("n").as("nb"), col("d").as("db")), col("b") === col("nb"))
-      .select(
-        when(col("da") < col("db") || (col("da") === col("db") && col("a") < col("b")),
-          col("a")).otherwise(col("b")).as("x"),
-        when(col("da") < col("db") || (col("da") === col("db") && col("a") < col("b")),
-          col("b")).otherwise(col("a")).as("y"))
-      .localCheckpoint(true)
-    val adj = o.groupBy(col("x").as("n"))
-      .agg(sort_array(collect_list(col("y"))).as("nbrs"))
-      .localCheckpoint(true)
-    val tris = o
-      .join(adj.select(col("n").as("jx"), col("nbrs").as("nx")), col("x") === col("jx"))
-      .join(adj.select(col("n").as("jy"), col("nbrs").as("ny")), col("y") === col("jy"))
+    val tris = orientedEdges(edges)
       .select(col("x"), col("y"),
         explode(array_intersect(col("nx"), col("ny"))).as("w"))
     val perNode = tris.select(col("x").as("n"))
       .unionByName(tris.select(col("y").as("n")))
       .unionByName(tris.select(col("w").as("n")))
       .groupBy("n").agg(count(lit(1)).as("tri"))
-    deg.filter(col("d") >= 2)
+    orientedAdjOf(edges).filter(col("d") >= 2)
       .join(perNode.select(col("n").as("pn"), col("tri")), col("n") === col("pn"), "left")
       .select(col("n").as("node"), col("d").as("degree"),
         coalesce(col("tri"), lit(0L)).cast("long").as("n_tri"),

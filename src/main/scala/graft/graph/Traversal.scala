@@ -189,7 +189,9 @@ object Traversal {
     * start set. Each level is one shuffle join keyed on the walk
     * head; the carried state is scalar string columns (the used-edge
     * set is a `|`-delimited string of ≤ maxDepth keys), so the
-    * shuffle stays narrow.
+    * shuffle stays narrow. Each level is materialized before the next
+    * joins it, as in [[bfs]]: level d's plan never re-derives levels
+    * 1..d−1, and the final union reads d stored levels.
     */
   def walks(edges: DataFrame, starts: DataFrame, maxDepth: Int,
       reverse: Boolean = false): DataFrame = {
@@ -216,6 +218,7 @@ object Traversal {
             .as("offsets"),
           concat(col("eseen"), edgeKey(col("_src"), col("_dst"))).as("eseen"),
           lit(d).as("depth"))
+        .localCheckpoint(true)
       level
     }
     out.reduce(_ unionByName _).drop("eseen")

@@ -325,8 +325,8 @@ object GraphQueries {
     Ranking.sparsifyTopK(w, k = 4)
   }
 
-  /** C8 triangle count: callgraph clustering structure via
-    * degree-ordered wedge join (Ranking.triangleCount). */
+  /** C8 triangle count: callgraph clustering structure via the
+    * degree-oriented sorted-adjacency intersect (Ranking.triangleCount). */
   def graphTriangles(s: SparkSession, d: String): DataFrame =
     Ranking.triangleCount(callEdges(s, d))
 

@@ -177,11 +177,13 @@ class GraphQueryEngine(g: BinaryGraph) {
   }
 
   /** Release every scope memo: unpersist the cached frames and the
-    * prepared edge projections [[Traversal]] memoized for them. The
-    * engine remains usable — the next query rebuilds its scope. */
+    * edge projections [[Traversal]] and [[graft.graph.Ranking]]
+    * memoized for them. The engine remains usable — the next query
+    * rebuilds its scope. */
   def close(): Unit = scopes.synchronized {
     scopes.values.flatMap(_.frames).foreach { f =>
       Traversal.release(f.e)
+      graft.graph.Ranking.release(f.e)
       f.calls.unpersist()
       f.ids.unpersist()
       f.e.unpersist()

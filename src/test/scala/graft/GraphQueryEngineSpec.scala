@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.importer.JsonImporter
+import graft.importer.{GraphStore, JsonImporter}
 import graft.queries.GraphQueryEngine
 
 /** End-to-end reference-CLI parity: import the fixture analyses, then
@@ -12,8 +12,14 @@ import graft.queries.GraphQueryEngine
   */
 class GraphQueryEngineSpec extends AnyFunSuite {
   lazy val spark: SparkSession = GraftSession.local(4)
-  lazy val engine = new GraphQueryEngine(JsonImporter.importAnalysis(spark,
-    getClass.getResource("/analysis").getPath))
+  // served from a saved store, as the CLI serves it: an imported
+  // graph's plans would redo the whole JSON import in every action
+  lazy val engine = {
+    val store = java.nio.file.Files.createTempDirectory("graft_engine_store").toString
+    GraphStore.save(JsonImporter.importAnalysis(spark,
+      getClass.getResource("/analysis").getPath), store, partitions = 2)
+    new GraphQueryEngine(GraphStore.load(spark, store))
+  }
 
   test("query functions by pattern, optionally binary-scoped") {
     val all = engine.queryFunctions("main").collect()

@@ -212,19 +212,34 @@ class ScopeSnapshotSpec extends AnyFunSuite {
     persisted
   }
 
+  /** Polls with `System.gc()` until no RDD persisted since `before`
+    * is left, then asserts so: a checkpoint that belongs to no memo
+    * (a bfs level, reciprocity's edge set) goes once it is garbage. */
+  private def assertReleased(before: Set[Int]): Unit = {
+    val deadline = System.nanoTime + 60L * 1000 * 1000 * 1000
+    while (persistedSince(before).nonEmpty && System.nanoTime < deadline) {
+      System.gc()
+      Thread.sleep(200)
+    }
+    val left = persistedSince(before)
+    assert(left.isEmpty, s"still persisted: ${left.toSeq.sorted.mkString("; ")}")
+  }
+
   test("close() after a distributed callgraph leaves no persisted RDD behind") {
     withThreshold("-1") {
       val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
       assert(callgraphThenClose().nonEmpty)
-      // a bfs call's per-level frontier checkpoints belong to no memo:
-      // they go once they are garbage
-      val deadline = System.nanoTime + 60L * 1000 * 1000 * 1000
-      while (persistedSince(before).nonEmpty && System.nanoTime < deadline) {
-        System.gc()
-        Thread.sleep(200)
-      }
-      val left = persistedSince(before)
-      assert(left.isEmpty, s"still persisted: ${left.toSeq.sorted.mkString("; ")}")
+      assertReleased(before)
     }
+  }
+
+  test("close() after graphShape leaves no persisted RDD behind") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val e = new GraphQueryEngine(g)
+    val shape = e.graphShape(Some("alpha.exe")).collect()
+    assert(shape.length == 1 && shape.head.getAs[Long]("n_triangles") > 0L)
+    assert(persistedSince(before).nonEmpty)
+    e.close()
+    assertReleased(before)
   }
 }
