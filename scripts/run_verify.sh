@@ -13,7 +13,6 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
 done
 rm -rf "$OUT"
 java $ADD_OPENS -Xmx8g \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
   graft.Verify "$SF_DIR" "$OUT"
 python3 scripts/check.py "$SF_DIR" "$OUT"

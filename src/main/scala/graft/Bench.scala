@@ -105,16 +105,7 @@ object Bench {
 
   private def runInProcess(
       names: Seq[String], sfDir: String, cpus: String, runs: Int): Results = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // prompt block release for memo-evicted checkpoints (see
-      // KeyedFrameMemo scaladoc); default 30min starves a board
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus.toInt)
     // Warm the JVM (codegen, parquet reader) and file-system cache so
     // the first timed query is not charged session startup.
     Seq("lineitem", "orders", "customer", "part", "supplier", "nation",

@@ -34,14 +34,7 @@ object DataGen {
   def main(args: Array[String]): Unit = {
     val sf = sys.env.getOrElse("SPARK_GRAFT_DATAGEN_SF", "1.0").toDouble
     val out = sys.env.getOrElse("SPARK_GRAFT_DATAGEN_OUT", "target/organic_sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     generate(spark, out, sf)
     println(s"""{"generated":"$out","sf":$sf}""")
     spark.stop()

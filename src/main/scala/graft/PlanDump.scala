@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Optimization-round measurement tool: writes `explain("formatted")`
   * for every declared query (or a comma-separated subset in arg 2) to
   * one file per query under the output dir (arg 1). Plans are built,
@@ -14,18 +12,11 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val suffix = if (args.length > 2) args(2) else ""
     val names = if (args.length > 1 && args(1).nonEmpty)
       args(1).split(",").map(_.trim).filter(_.nonEmpty).toSeq
     else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { n =>
       try {

@@ -91,14 +91,7 @@ object ScaleBench {
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val rep = sys.env.getOrElse("SPARK_GRAFT_REPLICATE", "10").toInt
     val out = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "target/scale_sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val reuse = sys.env.get("SPARK_GRAFT_SKIP_REPLICATE").contains("1") &&
       new java.io.File(s"$out/lineitem.parquet").exists()

@@ -46,17 +46,52 @@ object Tables {
     embMemo.getOrElseUpdate((s, d), table(s, d, "embeddings"))
 }
 
-/** Session factory for tests / standalone use. */
+/** The one session factory: every main, spec and embedding caller
+  * builds its session here, so all of them run one policy.
+  *
+  * Generated code is compiled once per session. A session serves many
+  * queries (an analyst's engine, a batch board, the oracle gate), and
+  * each query's whole-stage classes come back on its next call:
+  *   - `spark.sql.codegen.cache.maxEntries` is [[CodegenCacheEntries]].
+  *     Spark's default of 100 is below one pass of the benchmark board
+  *     (304 distinct classes on the sf0.01 `DataGen` tables) and one
+  *     analyst session (189 for the 11 CLI query types over a
+  *     24-binary store); its LRU eviction under a repeating cycle
+  *     recompiled every class on every pass. Each cached class holds
+  *     ~28 KB of heap, so the cap stays bounded (~14 MB when full)
+  *     instead of growing with every plan a long session ever saw.
+  *   - `spark.sql.codegen.useIdInClassName` is off: the same stage code
+  *     at another codegen stage id would otherwise be a new class.
+  *     Stack traces through generated code therefore name
+  *     `GeneratedIterator` without the `ForCodegenStage<n>` suffix.
+  *   - `spark.sql.ui.retainedExecutions` is small: the UI is off and
+  *     nothing reads the SQL execution history, whose default of 1000
+  *     plans holds heap that offsets most of what the class cache adds.
+  *
+  * Operators keep their plans stable from call to call. A LIMIT inside
+  * a plan (`.limit(1).count()`) names its state from a JVM-wide
+  * counter, so each such plan is a class never seen before; a
+  * root-level `isEmpty` is not code-generated and answers the same
+  * question. A join of two shuffled inputs that can both be small lets
+  * AQE build the broadcast from whichever finished first, so each call
+  * may plan, and compile, the join anew; aggregate instead, or fix the
+  * build side with a hint.
+  */
 object GraftSession {
+  /** Whole-stage class cache entries (measured working sets above). */
+  private val CodegenCacheEntries = 512
+
   def local(threads: Int = 4): SparkSession = {
     val spark = SparkSession
       .builder()
       .master(s"local[$threads]")
       .appName("graft")
       .config("spark.sql.shuffle.partitions", threads.toString)
-      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      .config("spark.sql.codegen.useIdInClassName", "false")
+      .config("spark.sql.ui.retainedExecutions", "20")
       // backstop for memo-eviction block release (KeyedFrameMemo
       // drops references; ContextCleaner unpersists on GC — the
       // default 30min periodic GC is too slow for a board, and the

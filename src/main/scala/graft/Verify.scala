@@ -1,22 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import org.apache.spark.metrics.source.CodegenMetrics
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // prompt block release for memo-evicted checkpoints (see
-      // KeyedFrameMemo scaladoc); default 30min starves a board
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
     // Optional comma-separated allowlist for fast local iteration on a
     // single query; the driver never sets it, so its runs stay full.
@@ -29,11 +19,13 @@ object Verify {
       // r9 organic-sf1 stall was diagnosable only via jstack
       System.err.println(s"[verify] start $name")
       val t0 = System.nanoTime()
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       try {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
+        val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
         System.err.println(
-          f"[verify] done  $name (${(System.nanoTime() - t0) / 1e9}%.1f s)")
+          f"[verify] done  $name (${(System.nanoTime() - t0) / 1e9}%.1f s, $compiled compiled)")
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }

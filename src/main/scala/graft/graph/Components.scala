@@ -49,22 +49,21 @@ object Components {
     // betweenness releaseRound discipline)
     var labelsBack = labels
     while (!converged && iter < maxIter) {
-      val neighborMin = und
-        .join(labels, und("b") === labels("node"))
-        .groupBy(col("a").as("node2"))
-        .agg(min(col("component")).as("nbr_min"))
-      // Carry the previous label through the materialization so the
-      // convergence check is a column compare on the already-checkpointed
-      // frame — no extra label-join job per round. Labels only ever
-      // decrease, so zero strict decreases is a true fixpoint.
+      // Next label = min over the node's own row (which also carries
+      // the previous label for the convergence check) and its neighbour
+      // messages, in one aggregation; the hint pins the build side (see
+      // GraftSession on AQE-chosen sides). Labels only ever decrease, so
+      // zero strict decreases is a true fixpoint.
+      val messages = und
+        .join(labels.hint("shuffle_hash"), und("b") === labels("node"))
+        .select(col("a").as("node"), col("component"), lit(null).cast("long").as("own"))
       val nextWide = labels
-        .join(neighborMin, labels("node") === neighborMin("node2"), "left")
-        .select(col("node"), col("component").as("prev"),
-          least(col("component"), coalesce(col("nbr_min"), col("component")))
-            .as("component"))
+        .select(col("node"), col("component"), col("component").as("own"))
+        .unionByName(messages)
+        .groupBy("node")
+        .agg(max(col("own")).as("prev"), min(col("component")).as("component"))
         .localCheckpoint(true)
-      val changed = nextWide.filter(col("component") < col("prev")).limit(1).count()
-      converged = changed == 0
+      converged = nextWide.filter(col("component") < col("prev")).isEmpty
       Ranking.releaseRound(labelsBack)
       labels = nextWide.select("node", "component")
       labelsBack = nextWide

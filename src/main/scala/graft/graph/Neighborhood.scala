@@ -1,6 +1,7 @@
 package graft.graph
 
 import org.apache.spark.sql.{DataFrame, Column}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Neighborhood-structure analytics over the call graph: function
@@ -62,8 +63,8 @@ object Neighborhood {
   /** Mutual-recursion groups: connected components over the
     * bounded-mutual-reachability pair graph. Two scoped functions a, b
     * are a mutual pair when each reaches the other within ≤ maxDepth
-    * hops ([[Traversal.reachWithin]] both ways is one reach table
-    * self-joined with the roles swapped); groups are then BOUNDED
+    * hops ([[Traversal.reachWithin]] both ways: one reach table,
+    * grouped on the unordered pair); groups are then BOUNDED
     * min-label components over those pairs (`ccRounds` fixed — labels
     * are fixpoint-stable, so early convergence equals running all
     * rounds and the oracle replays the identical recursion, the
@@ -83,15 +84,18 @@ object Neighborhood {
       .join(scope.select(col("node").cast("long").as("node")).distinct(),
         Seq("node"), "left_semi")
       .localCheckpoint(true)
-    val pairs = reach.as("f").join(
-        reach.select(col("start").as("rstart"), col("node").as("rnode")).as("r"),
-        col("f.start") === col("rnode") && col("f.node") === col("rstart")
-          && col("f.start") < col("f.node"))
-      .select(col("f.start").as("src"), col("f.node").as("dst"))
+    // reach rows are distinct and never start = node: a pair is mutual
+    // when it has two rows (grouped, not self-joined: see GraftSession)
+    val pairs = reach
+      .groupBy(least(col("start"), col("node")).as("src"),
+        greatest(col("start"), col("node")).as("dst"))
+      .agg(count(lit(1)).as("n"))
+      .filter(col("n") === 2)
+      .select("src", "dst")
     val labels = Components.labelPropagation(pairs, maxIter = ccRounds)
-    val sizes = labels.groupBy("component").agg(count(lit(1)).as("group_size"))
-    labels.join(sizes, "component")
-      .select(col("node"), col("component").as("group_id"), col("group_size"))
+    labels
+      .select(col("node"), col("component").as("group_id"),
+        count(lit(1)).over(Window.partitionBy("component")).as("group_size"))
       .orderBy("node")
   }
 

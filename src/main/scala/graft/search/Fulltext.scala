@@ -119,9 +119,9 @@ object Fulltext {
     *              · tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl))
     *
     * Doc lengths are one postings-sized aggregation (dl = Σ tf per
-    * doc), avgdl = Σdl/N a broadcast 1-row frame; the matched⋈lengths
-    * join keys on doc_id (shuffle or AQE-broadcast — never the corpus
-    * to the driver). Per-(doc,term) contributions are quantized to
+    * doc) that also collects each doc's matched (term, tf) pairs;
+    * avgdl = Σdl/N a broadcast 1-row frame — never the corpus to the
+    * driver. Per-(doc,term) contributions are quantized to
     * 1e-6 BEFORE the per-doc sum, so the score is an exact long sum —
     * order-independent across engines, one class stronger than
     * round-after-float-sum (the contribution doubles themselves are
@@ -129,12 +129,18 @@ object Fulltext {
     * the expression tree is replayed verbatim by the oracle). */
   def bm25SearchIndex(index: FulltextIndex, terms: Seq[String], limit: Int = 20,
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val lengths = index.postings.groupBy("doc_id").agg(sum(col("tf")).as("dl"))
-    val totals = lengths.agg(sum(col("dl")).cast("long").as("total_dl"))
-    val matched = index.postings.filter(col("token").isInCollection(terms))
-    val df = matched.groupBy("token").agg(count(lit(1)).as("df"))
-    matched.join(broadcast(df), "token")
-      .join(lengths, "doc_id")
+    // each doc's length and matched terms from one aggregation, not a
+    // join of two shuffled inputs (see GraftSession)
+    val perDoc = index.postings.groupBy("doc_id").agg(
+      sum(col("tf")).as("dl"),
+      collect_list(when(col("token").isInCollection(terms),
+        struct(col("token"), col("tf")))).as("hits"))
+    val totals = perDoc.agg(sum(col("dl")).cast("long").as("total_dl"))
+    val df = index.postings.filter(col("token").isInCollection(terms))
+      .groupBy("token").agg(count(lit(1)).as("df"))
+    perDoc.select(col("doc_id"), col("dl"), explode(col("hits")).as("h"))
+      .select(col("doc_id"), col("dl"), col("h.token").as("token"), col("h.tf").as("tf"))
+      .join(broadcast(df), "token")
       .crossJoin(broadcast(index.meta))
       .crossJoin(broadcast(totals))
       .withColumn("idf",
