@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.functions.KeyedFrameMemo
+
 /** Readers for the driver-generated TPC-H-ish parquet tables.
   *
   * At 100 TB these would be partitioned/bucketed parquet on object
@@ -27,23 +29,21 @@ object Tables {
   /** IDENTITY-STABLE documents frame: one DataFrame object per
     * (session, dir), so the identity-keyed derived-artifact memos
     * (TextOps.shinglesShared / shingleDfShared, Dedup.minhashSigsShared)
-    * hit across every board query instead of once per call — the
-    * GraphQueries.edgeMemo discipline applied to the text family. The
-    * frame itself is just the parquet scan (nothing cached here; the
-    * heavy shared artifacts are checkpointed behind their own memos). */
-  private val docsMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+    * hit across every board query instead of once per call. The frame
+    * itself is just the parquet scan (it measures 0 bytes in the
+    * [[KeyedFrameMemo]] ledger; the heavy shared artifacts are
+    * checkpointed behind their own memos). */
+  private val docsMemo = new KeyedFrameMemo[(SparkSession, String)]
   def documentsShared(s: SparkSession, d: String): DataFrame =
-    docsMemo.getOrElseUpdate((s, d), table(s, d, "documents"))
+    docsMemo.getOrBuild((s, d))(table(s, d, "documents"))
 
   /** IDENTITY-STABLE embeddings frame — the [[documentsShared]]
     * discipline for the vector family, so Similarity's identity-keyed
-    * shared-rerank memo (bruteTopKMemo) hits across the D6/D64/D69
-    * trio instead of re-scanning the corpus per query. */
-  private val embMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+    * memos (the shared rerank, the LSH buckets) hit across queries
+    * instead of re-scanning the corpus per query. */
+  private val embMemo = new KeyedFrameMemo[(SparkSession, String)]
   def embeddingsShared(s: SparkSession, d: String): DataFrame =
-    embMemo.getOrElseUpdate((s, d), table(s, d, "embeddings"))
+    embMemo.getOrBuild((s, d))(table(s, d, "embeddings"))
 }
 
 /** The one session factory: every main, spec and embedding caller

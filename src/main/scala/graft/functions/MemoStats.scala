@@ -2,8 +2,8 @@ package graft.functions
 
 import java.util.concurrent.atomic.AtomicLong
 
-/** Global counters for the shared-frame memo layer (prepMemo family,
-  * KeyedFrameMemo, the GraphQueries (session, dir)-keyed memos).
+/** Global counters for the shared-frame memo layer: every
+  * [[KeyedFrameMemo]] build and hit.
   *
   * Purpose: bench ATTRIBUTION. Board totals under shared memos are
   * honest, but a per-query median is positional — the first consumer

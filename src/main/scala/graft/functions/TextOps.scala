@@ -109,214 +109,16 @@ object TextOps {
       .select(col("doc_id"), shingleHash(col("h1"), col("h2"), col("h3")).as("sh"))
   }
 
-  /** Identity-keyed memo for the shared text artifacts below — the
-    * Traversal.prepMemo discipline applied to TextOps: one entry per
-    * input frame OBJECT (PipelineEntries serves one docs frame per
-    * (session, dir) via Tables.documentsShared, so board queries
-    * share). Eviction is LRU, never wholesale, and budgeted in BYTES
-    * across every memo instance (see the companion): the block
-    * manager charges storage in bytes, so bytes — measured from the
-    * checkpointed RDD's own storage info at build time — are what the
-    * budget caps; a count cap alone let a board's worth of sf1 frames
-    * pile up ~80 s of residency drag (r11 sf1 bisection). Past the
-    * global budget the globally least-recently-fetched frames are
-    * dropped; past 64 entries in one memo (spec-suite throwaway
-    * frames, usually too small to register in bytes) that memo drops
-    * to its 16 most recent. Eviction only DROPS the memo's own
-    * reference, it never unpersists. A checkpointed RDD cannot be
-    * recomputed, so the release of its blocks is delegated to Spark's
-    * ContextCleaner (`spark.cleaner.referenceTracking`, on by
-    * default): every persisted RDD is weak-ref-registered at persist
-    * time, and its blocks are unpersisted exactly when the RDD object
-    * itself is garbage-collected. A plan composed from a memo handle
-    * holds the LogicalRDD — and therefore the RDD — strongly, so no
-    * amount of memo churn between composing a plan and executing it
-    * can invalidate the handle: the lifetime IS the reachability of
-    * the consumer plan (MemoChurnSpec pins 300 evictions + System.gc
-    * between handle fetch and execution). This replaces the r10
-    * grace-tick heuristic, whose 256-access window was a bet a
-    * sufficiently slow consumer could still lose, and whose graveyard
-    * pinned up to 256 ticks of dead frames the cleaner now reaps at
-    * the first GC after their last consumer dies. */
-  private[graft] class KeyedFrameMemo[K] {
-    import KeyedFrameMemo._
-    private[functions] val frames =
-      scala.collection.concurrent.TrieMap.empty[K, DataFrame]
-    private[functions] val stamps =
-      scala.collection.concurrent.TrieMap.empty[K, Long]
-    private[functions] val sizes =
-      scala.collection.concurrent.TrieMap.empty[K, Long]
-    register(this)
-    private[functions] def drop(key: Any): Unit = {
-      frames.remove(key.asInstanceOf[K])
-      stamps.remove(key.asInstanceOf[K])
-      sizes.remove(key.asInstanceOf[K])
-    }
-    /** Drop `key`'s entry: the frame it held, if any. */
-    def remove(key: K): Option[DataFrame] = {
-      val f = frames.get(key)
-      drop(key)
-      f
-    }
-    /** Non-building lookup: lets a measured dispatch choose its plan
-      * based on whether a sibling query ALREADY paid for the shared
-      * frame, without forcing the build itself (the D4b prefix join
-      * rides D4's pair frame only when it exists). Touches the LRU
-      * stamp on hit so riding keeps the frame warm. */
-    def peek(key: K): Option[DataFrame] = {
-      val f = frames.get(key)
-      if (f.isDefined) stamps.put(key, globalTick.incrementAndGet())
-      f
-    }
-    def getOrBuild(key: K)(build: => DataFrame): DataFrame = {
-      if (frames.contains(key)) MemoStats.recordHit()
-      else MemoStats.recordBuild()
-      var built = false
-      val out = frames.getOrElseUpdate(key, {
-        if (frames.size > 64) {
-          val keep = stamps.toSeq.sortBy(-_._2).take(16).map(_._1).toSet
-          (frames.keySet.toSet -- keep - key).foreach(drop)
-          gcNudgeAsync()
-        }
-        built = true
-        build
-      })
-      stamps.put(key, globalTick.incrementAndGet())
-      if (built) {
-        // measure AFTER build: the heavy builds end in an eager
-        // localCheckpoint(true), so the blocks exist now; lazy (non-
-        // checkpointed) frames measure 0 and ride the count backstop
-        sizes.put(key, frameBytes(out))
-        sweepOverBudget(this, key)
-      }
-      out
-    }
-  }
-
-  /** The global byte ledger over every [[KeyedFrameMemo]] instance —
-    * residency is a property of the one block manager all memos
-    * share, so the budget is global, not per-memo. */
-  private[graft] object KeyedFrameMemo {
-    private val globalTick = new java.util.concurrent.atomic.AtomicLong()
-    private val registry =
-      new java.util.concurrent.CopyOnWriteArrayList[KeyedFrameMemo[_]]
-    private def register(m: KeyedFrameMemo[_]): Unit = { registry.add(m); () }
-
-    /** Default max(6 GiB, heap/4): the floor is ~1/4 of the 24 GiB
-      * organic-board heap — big enough that the sf0.1 gate board
-      * (Σ shared artifacts ≈ 1 GiB) never evicts, small enough that
-      * an sf1 board's tail can't hold every earlier query's
-      * checkpoints resident — and the heap/4 term scales the budget
-      * with the memory the operator was actually given (guide-§5
-      * posture: storage residency should be a fraction of the
-      * execution heap, not a constant tuned for one host). The fixed
-      * 6 GiB starved the r15 sf10 board: its 64 GiB generation JVMs
-      * still evicted the simhash pair frame between dedup_simhash and
-      * its histogram twin (124 s rebuild) and the shared rerank frame
-      * between sim_topk and embed_knn_purity (134 s rebuild). Override
-      * via GRAFT_MEMO_BUDGET_MB (env) or -Dgraft.memo.budget.mb. */
-    private[graft] def budgetBytes: Long =
-      sys.props.get("graft.memo.budget.mb")
-        .orElse(sys.env.get("GRAFT_MEMO_BUDGET_MB"))
-        .map(_.toLong << 20)
-        .getOrElse(math.max(6L << 30, Runtime.getRuntime.maxMemory / 4))
-
-    /** Persisted bytes (memory + disk) of the frame's checkpointed
-      * RDD leaves, from the driver's own storage listing — no job
-      * runs. 0 for frames with no LogicalRDD leaf or whose session
-      * has stopped. */
-    private[graft] def frameBytes(df: DataFrame): Long = try {
-      if (df.sparkSession.sparkContext.isStopped) 0L
-      else {
-        val ids = df.queryExecution.analyzed.collect {
-          case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
-        }.toSet
-        if (ids.isEmpty) 0L
-        else df.sparkSession.sparkContext.getRDDStorageInfo
-          .filter(i => ids.contains(i.id)).map(i => i.memSize + i.diskSize)
-          .sum
-      }
-    } catch { case _: Exception => 0L }
-
-    private[graft] def residentBytes: Long =
-      registry.toArray(Array.empty[KeyedFrameMemo[_]])
-        .map(_.sizes.values.foldLeft(0L)(_ + _)).sum
-
-    /** Entries below this size are invisible to the byte sweep:
-      * dropping a sub-MiB frame toward a GiB-scale overage frees
-      * nothing, yet the old pure-age sweep evicted exactly those
-      * first — small-but-expensive-to-REBUILD frames built early in a
-      * board (the r15 sf10 boards rebuilt the ~100 KB shared rerank
-      * frame at a 134 s rebuild cost, and the ~MB simhash pair frame
-      * at 124 s, while multi-GiB shingle checkpoints kept the ledger
-      * over budget). Worst-case unswept residency is bounded by the
-      * per-memo 64-entry count cap: 64 entries × <1 MiB ≈ 64 MiB per
-      * memo — noise against the ≥6 GiB budget. */
-    private val SweepFloorBytes: Long = 1L << 20
-
-    /** Drop globally-oldest entries ≥ [[SweepFloorBytes]] until the
-      * ledger fits the budget (the just-built entry is exempt — a
-      * single artifact larger than the budget must still serve its
-      * consumers). Best-effort under concurrency: a racing rebuild
-      * costs wasted work, never correctness (reachability owns
-      * lifetime). */
-    private def sweepOverBudget(owner: KeyedFrameMemo[_], key: Any): Unit = {
-      var total = residentBytes
-      if (total <= budgetBytes) return
-      val all = registry.toArray(Array.empty[KeyedFrameMemo[_]])
-      val byAge = all.flatMap { m =>
-        m.stamps.toSeq.map { case (k, t) =>
-          (t, m, k.asInstanceOf[Any])
-        }
-      }.sortBy(_._1)
-      var dropped = false
-      byAge.iterator.takeWhile(_ => total > budgetBytes).foreach {
-        case (_, m, k) =>
-          val b = m.sizes.asInstanceOf[
-            scala.collection.concurrent.TrieMap[Any, Long]].getOrElse(k, 0L)
-          if (b >= SweepFloorBytes && !(m.eq(owner) && k == key)) {
-            m.drop(k)
-            total -= b
-            dropped = true
-          }
-      }
-      if (dropped) gcNudgeAsync()
-    }
-
-    /** Rate-limited (≥60 s apart), asynchronous collector nudge so
-      * the ContextCleaner reaps dropped frames' blocks promptly
-      * rather than at the next organic full GC — which a large-heap
-      * board may not reach for minutes. Never synchronous in the
-      * build path (a forced full GC is a multi-second stop-the-world
-      * on 24-64 GiB heaps — r11 paid it once per eviction sweep), and
-      * under -XX:+DisableExplicitGC the backstop is the session's
-      * `spark.cleaner.periodicGC.interval` (GraftSession/Bench/Verify
-      * set 2min). Consumers still pinning a frame keep it reachable,
-      * so this is promptness, never a correctness bet. */
-    private val lastGcNanos = new java.util.concurrent.atomic.AtomicLong(0L)
-    private def gcNudgeAsync(): Unit = {
-      val now = System.nanoTime()
-      val prev = lastGcNanos.get()
-      if (now - prev > 60L * 1000L * 1000L * 1000L
-          && lastGcNanos.compareAndSet(prev, now)) {
-        val t = new Thread(() => System.gc(), "graft-memo-gc-nudge")
-        t.setDaemon(true)
-        t.start()
-      }
-    }
-  }
-  private[graft] final class FrameMemo extends KeyedFrameMemo[DataFrame]
-  private def memoShared(memo: FrameMemo, key: DataFrame)(
-      build: => DataFrame): DataFrame = memo.getOrBuild(key)(build)
-
   /** The distinct per-doc shingle SET (doc_id, sh), checkpointed once
     * per docs frame — the frame the gated queries (novelty, template,
     * containment, prefix/plain ngram Jaccard, the minhash family)
     * each re-derived from scratch before round 8: one corpus scan +
-    * tokenize + shingle window + distinct, now paid once per board. */
+    * tokenize + shingle window + distinct, now paid once per board
+    * (PipelineEntries serves one docs frame per (session, dir) via
+    * Tables.documentsShared, so the [[FrameMemo]] hits across queries). */
   private val shingleSetMemo = new FrameMemo
   def shinglesShared(docs: DataFrame): DataFrame =
-    memoShared(shingleSetMemo, docs) {
+    shingleSetMemo.getOrBuild(docs) {
       shingles(docs).distinct().localCheckpoint(true)
     }
 
@@ -325,7 +127,7 @@ object TextOps {
     * df-capped / df==1 consumer. */
   private val shingleDfMemo = new FrameMemo
   def shingleDfShared(docs: DataFrame): DataFrame =
-    memoShared(shingleDfMemo, docs) {
+    shingleDfMemo.getOrBuild(docs) {
       shinglesShared(docs).groupBy("sh").agg(count(lit(1)).as("df"))
         .localCheckpoint(true)
     }
@@ -340,7 +142,7 @@ object TextOps {
     * [[shinglesShared]] itself. */
   private val shingleArrMemo = new FrameMemo
   def shingleArraysShared(docs: DataFrame): DataFrame =
-    memoShared(shingleArrMemo, docs) {
+    shingleArrMemo.getOrBuild(docs) {
       shinglesShared(docs).groupBy("doc_id")
         .agg(sort_array(collect_list(col("sh"))).as("arr"),
           count(lit(1)).as("n_sh"))

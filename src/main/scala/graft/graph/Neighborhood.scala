@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Column}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.KeyedFrameMemo
+
 /** Neighborhood-structure analytics over the call graph: function
   * similarity by shared callees (the binary-diffing primitive — two
   * functions that call the same set of helpers are near-certain
@@ -161,11 +163,11 @@ object Neighborhood {
     * (⌊10⁶/ln indeg⌋ vs ⌊10⁶/indeg⌋), so the expensive machinery
     * (the z-keyed self-join, the pair aggregation, both adjacency
     * anti-joins) runs ONCE per (edges, hubCap) and carries BOTH
-    * weight sums; each predictor projects its column. Identity-keyed
-    * LRU memo (the sccMemo discipline), checkpointed. Returns
+    * weight sums; each predictor projects its column. Memoized per
+    * (edge frame identity, hubCap), checkpointed. Returns
     * (fn_a, fn_b, score_aa, score_ra, shared) for non-adjacent pairs
     * with ≥ 1 common sub-cap neighbor. */
-  private val pairMemo = new graft.functions.TextOps.KeyedFrameMemo[(DataFrame, Int)]
+  private val pairMemo = new KeyedFrameMemo[(DataFrame, Int)]
   private def commonNeighborPairs(edges: DataFrame, hubCap: Int): DataFrame =
     pairMemo.getOrBuild((edges, hubCap)) {
       val e = Ranking.simpleEdgesOf(edges)

@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.FrameMemo
+
 /** Whole-graph analytics beyond the reference's query surface
   * (BinaryX-Graph delegates storage to Neo4j and ships no graph
   * algorithms — Spark adds them): PageRank for function importance
@@ -26,7 +28,7 @@ object Ranking {
   }
 
   /** Eagerly release a SUPERSEDED round frame's localCheckpoint
-    * blocks (the prepMemo eviction idiom): a checkpointed frame's
+    * blocks: a checkpointed frame's
     * storage lives behind its LogicalRDD leaf, invisible to the
     * CacheManager, and otherwise lingers until the ContextCleaner
     * happens to GC the reference — across a 190-query bench session
@@ -43,15 +45,15 @@ object Ranking {
       }
     catch { case _: Exception => () }
 
-  /** Identity-keyed node-set memo over the INPUT edge frame — the
-    * prepMemo discipline for the score-propagation family: engine
-    * callers pass the per-(session, dir) cached callEdges OBJECT, so
-    * pagerank / weighted pagerank / ppr / katz / hits / salsa / eigen
-    * share ONE distinct-union node materialization per board instead
-    * of re-deriving (scan + shuffle + checkpoint) it each. Ownership
-    * moves to the memo: operators must NOT releaseRound a shared
-    * frame — the LRU eviction in FrameMemo is the release point. */
-  private val nodesMemo = new graft.functions.TextOps.FrameMemo
+  /** Identity-keyed node-set memo over the INPUT edge frame for the
+    * score-propagation family: engine callers pass the per-(session,
+    * dir) cached callEdges OBJECT, so pagerank / weighted pagerank /
+    * ppr / katz / hits / salsa / eigen share ONE distinct-union node
+    * materialization per board instead of re-deriving (scan +
+    * shuffle + checkpoint) it each. Ownership moves to the memo:
+    * operators must NOT releaseRound a shared frame — the memo's LRU,
+    * or KeyedFrameMemo.release, releases it. */
+  private val nodesMemo = new FrameMemo
   private[graph] def nodesOf(edges: DataFrame): DataFrame =
     nodesMemo.getOrBuild(edges) {
       edges.select(col("src").cast("long").as("node"))
@@ -61,20 +63,12 @@ object Ranking {
 
   /** Identity-keyed (src, dst)-distinct edge memo — the hits / salsa /
     * eigen trio each re-checkpointed this identical projection. */
-  private val simpleEdgesMemo = new graft.functions.TextOps.FrameMemo
+  private val simpleEdgesMemo = new FrameMemo
   private[graph] def simpleEdgesOf(edges: DataFrame): DataFrame =
     simpleEdgesMemo.getOrBuild(edges) {
       edges.select(col("src").cast("long"), col("dst").cast("long"))
         .distinct().localCheckpoint(true)
     }
-
-  /** Drop every frame memoized for `edges` here — its node set, its
-    * distinct edges and its oriented adjacency — and unpersist their
-    * checkpoint blocks: the release point for an owner that is about
-    * to unpersist the edge frame itself (an engine's `close()`). */
-  private[graft] def release(edges: DataFrame): Unit =
-    Seq(nodesMemo, simpleEdgesMemo, orientedAdjMemo)
-      .foreach(_.remove(edges).foreach(releaseRound))
 
   /** PageRank in FIXED-POINT integer arithmetic: ranks are
     * parts-per-million longs (sp₀ = 10⁶ ≙ the n-scaled rank 1.0), the
@@ -907,7 +901,7 @@ object Ranking {
     * local clustering, assortativity, k_nn(d) and the rich club all
     * read this one frame, so an edge frame pays for the orientation
     * once however many of them run on it. */
-  private val orientedAdjMemo = new graft.functions.TextOps.FrameMemo
+  private val orientedAdjMemo = new FrameMemo
   private[graft] def orientedAdjOf(edges: DataFrame): DataFrame =
     orientedAdjMemo.getOrBuild(edges) {
       val und = undirected(edges)

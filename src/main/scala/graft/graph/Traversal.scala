@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.FrameMemo
+
 /** Distributed graph traversal over edge DataFrames.
   *
   * Spark-first re-expression of the reference's Cypher var-length
@@ -25,51 +27,15 @@ object Traversal {
   /** The (_src, _dst) projection hash-partitioned on _src and
     * checkpointed — the shared amortization of every iterative
     * traversal that probes edges on the source key. Memoized by the
-    * INPUT FRAME'S OBJECT IDENTITY: GraphQueries serves one cached
-    * edge DataFrame per (session, dir), so closeness, harmonic, ANF,
-    * recursion-groups and the walk generators all reuse ONE exchange
-    * instead of each paying their own (DataFrame equality is
-    * reference equality — two lexically identical plans don't
-    * collide). Cleared wholesale past 64 entries so spec-suite
-    * throwaway frames can't grow it unboundedly; eviction UNPERSISTS
-    * each dropped frame's checkpoint blocks (and skips frames whose
-    * session has already stopped) so storage is released eagerly
-    * rather than lingering until the ContextCleaner GCs the
-    * reference. */
-  private val prepMemo =
-    scala.collection.concurrent.TrieMap.empty[DataFrame, DataFrame]
-
-  /** getOrElseUpdate with the shared eviction discipline: past 64
-    * entries the map is cleared wholesale, and each dropped frame's
-    * localCheckpoint blocks are unpersisted directly — they live
-    * behind the LogicalRDD leaf, not the CacheManager, so this
-    * releases storage now instead of waiting for ContextCleaner GC
-    * (frames whose session already stopped are skipped). */
-  private def memoPrepared(
-      memo: scala.collection.concurrent.TrieMap[DataFrame, DataFrame],
-      edges: DataFrame)(build: => DataFrame): DataFrame = {
-    if (memo.contains(edges)) graft.functions.MemoStats.recordHit()
-    else graft.functions.MemoStats.recordBuild()
-    memo.getOrElseUpdate(edges, {
-      if (memo.size > 64) {
-        memo.values.foreach(Ranking.releaseRound)
-        memo.clear()
-      }
-      build
-    })
-  }
-
-  /** Drop every prepared projection memoized for `edges` and unpersist
-    * its checkpoint blocks — the release point for an owner that is
-    * about to unpersist the edge frame itself (an engine's `close()`),
-    * so the projections do not stay live until 64 newer entries push
-    * them out. */
-  private[graft] def release(edges: DataFrame): Unit =
-    Seq(prepMemo, revPrepMemo, prepDistinctMemo, dstPrepDistinctMemo)
-      .foreach(_.remove(edges).foreach(Ranking.releaseRound))
-
+    * INPUT FRAME'S OBJECT IDENTITY ([[graft.functions.FrameMemo]]):
+    * GraphQueries serves one cached edge DataFrame per (session, dir),
+    * so closeness, harmonic, ANF, recursion-groups and the walk
+    * generators all reuse ONE exchange instead of each paying their
+    * own (DataFrame equality is reference equality — two lexically
+    * identical plans don't collide). */
+  private val prepMemo = new FrameMemo
   private[graph] def srcPrepared(edges: DataFrame): DataFrame =
-    memoPrepared(prepMemo, edges) {
+    prepMemo.getOrBuild(edges) {
       edgeCols(edges).select("_src", "_dst")
         .repartition(
           edges.sparkSession.sessionState.conf.numShufflePartitions,
@@ -82,10 +48,9 @@ object Traversal {
     * that sweeps both directions (callgraph_bfs forward+reverse, the
     * diameter double sweep riders) materializes each orientation at
     * most once per cached edge frame rather than per bfs() call. */
-  private val revPrepMemo =
-    scala.collection.concurrent.TrieMap.empty[DataFrame, DataFrame]
+  private val revPrepMemo = new FrameMemo
   private[graph] def srcPreparedRev(edges: DataFrame): DataFrame =
-    memoPrepared(revPrepMemo, edges) {
+    revPrepMemo.getOrBuild(edges) {
       edgeCols(edges).select(col("_dst").as("_src"), col("_src").as("_dst"))
         .repartition(
           edges.sparkSession.sessionState.conf.numShufflePartitions,
@@ -96,13 +61,10 @@ object Traversal {
   /** [[srcPrepared]] with an explicit DISTINCT — the variant for
     * path-COUNTING operators (betweenness σ) where a duplicate edge
     * row would double a shortest-path count rather than be absorbed
-    * by set semantics. Same identity-keyed memo discipline, same
-    * eviction pool (both maps stay small together under the shared
-    * 64 cap). Requires only (src, dst) columns. */
-  private val prepDistinctMemo =
-    scala.collection.concurrent.TrieMap.empty[DataFrame, DataFrame]
+    * by set semantics. Requires only (src, dst) columns. */
+  private val prepDistinctMemo = new FrameMemo
   private[graph] def srcPreparedDistinct(edges: DataFrame): DataFrame =
-    memoPrepared(prepDistinctMemo, edges) {
+    prepDistinctMemo.getOrBuild(edges) {
       edges.select(col("src").cast("long").as("_src"),
           col("dst").cast("long").as("_dst")).distinct()
         .repartition(
@@ -112,12 +74,10 @@ object Traversal {
     }
 
   /** [[srcPreparedDistinct]] mirrored on the DESTINATION key — for
-    * backward sweeps (SCC extraction) that probe edges on dst. Same
-    * identity memo discipline. */
-  private val dstPrepDistinctMemo =
-    scala.collection.concurrent.TrieMap.empty[DataFrame, DataFrame]
+    * backward sweeps (SCC extraction) that probe edges on dst. */
+  private val dstPrepDistinctMemo = new FrameMemo
   private[graph] def dstPreparedDistinct(edges: DataFrame): DataFrame =
-    memoPrepared(dstPrepDistinctMemo, edges) {
+    dstPrepDistinctMemo.getOrBuild(edges) {
       edges.select(col("src").cast("long").as("_src"),
           col("dst").cast("long").as("_dst")).distinct()
         .repartition(

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import org.apache.spark.sql.Column
 
-import graft.functions.TextOps
+import graft.functions.{FrameMemo, TextOps}
 import graft.functions.TextOps.P
 
 /** Deduplication operators for large-scale training-data pipelines
@@ -47,7 +47,7 @@ object Dedup {
     * docs frame identity — eight gated queries (lsh, clusters,
     * keep-best, edit-distance rerank, cross-source, inflation, bucket
     * stats, split leakage) each re-derived it before round 8. */
-  private val sigsMemo = new TextOps.FrameMemo
+  private val sigsMemo = new FrameMemo
   def minhashSigsShared(docs: DataFrame): DataFrame =
     sigsMemo.getOrBuild(docs) { minhashLong(docs).localCheckpoint(true) }
 
@@ -224,7 +224,7 @@ object Dedup {
     * query (D3) and its histogram twin (D90) each re-derived the
     * token-explosion + 56-vote aggregate before this memo — the
     * signature pass, not the band join, dominates both. */
-  private val simSigsMemo = new TextOps.FrameMemo
+  private val simSigsMemo = new FrameMemo
   def simhashSigsShared(docs: DataFrame): DataFrame =
     simSigsMemo.getOrBuild(docs) {
       simhashSignatures(docs).localCheckpoint(true)
@@ -237,7 +237,7 @@ object Dedup {
     * paid the join, the histogram twin rides the checkpoint instead
     * of re-running the candidate machinery. Non-default thresholds
     * bypass the memo. */
-  private val simPairsMemo = new TextOps.FrameMemo
+  private val simPairsMemo = new FrameMemo
   private def simhashPairs(docs: DataFrame, maxHamming: Int): DataFrame =
     if (maxHamming == 6)
       simPairsMemo.getOrBuild(docs) {
@@ -478,7 +478,7 @@ object Dedup {
     * pair-graph-sized (near-dups only), consumed by the cluster
     * query, keep-best, the cluster cap, and cluster-size stats —
     * each re-ran the 12-round label fixpoint before this memo. */
-  private val clustersMemo = new TextOps.FrameMemo
+  private val clustersMemo = new FrameMemo
 
   private def clustersBuild(docs: DataFrame, minEstJaccard: Double,
       rounds: Int): DataFrame =
@@ -600,7 +600,7 @@ object Dedup {
     * every board (189.6 + 214.5 s at organic sf10). What persists is
     * the FILTERED (J ≥ 0.1) output — near-dup-sized, never the raw
     * candidate stream, so the checkpoint adds no corpus-scale disk. */
-  private val jaccardPairsMemo = new TextOps.FrameMemo
+  private val jaccardPairsMemo = new FrameMemo
   private val JaccardMemoFloor = 0.1
   private def jaccardPairsShared(docs: DataFrame): DataFrame =
     jaccardPairsMemo.getOrBuild(docs) {

@@ -82,7 +82,7 @@ object Similarity {
     * session logs a WARN naming the fix, so a memo miss is never
     * silent. */
   private val bruteTopKMemo =
-    new graft.functions.TextOps.KeyedFrameMemo[(DataFrame, String)]
+    new graft.functions.KeyedFrameMemo[(DataFrame, String)]
   private val K_SHARED = 5
   /** (schema, predicate) signatures already built once — the
     * equal-shape-different-identity rebuild detector. */
@@ -469,30 +469,10 @@ object Similarity {
     */
   def lshTopK(emb: DataFrame, k: Int = 3,
       queryPred: Column = lit(true)): DataFrame = {
-    // (vec_id, qv, nrm, bucket) materialized ONCE: an unmaterialized
-    // bucket chain re-derived the interpreted quantize transform
-    // from the parquet scan inside every consumer branch (both join
-    // sides and the query-side filter — 4 copies in the r15 plan);
-    // after materialization every stage is codegen over primitive
-    // arrays. A lazy persist (not the eager localCheckpoint the
-    // k-means paths use) folds the build into the first consuming
-    // stage — the extra blocking job measurably cost the cheap
-    // recall-audit rider ~0.2 s at sf0.1. Buckets are bit-identical:
-    // same fused signature expression over the same qv, zero-norm
-    // rows dropped on both join sides exactly as before.
-    val planes = 8
-    val flat: Seq[Long] =
-      (0 until planes).flatMap(j => (1 to 64).map(i1 => planeWeightValue(j, i1)))
-    val b = withNorm(emb)
-      .select(col("vec_id"), col("qv"), col("nrm"),
-        element_at(VectorOps.lshBandSignature(col("qv"), flat, 1, planes), 1)
-          .as("bucket"))
-      .persist()
-      // filter AFTER the persist: pushed below it, the nrm > 0
-      // condition re-derives the whole quantize chain inside the
-      // cache build (predicate pushdown rewrites it over the raw
-      // scan); above it, both join sides read the materialized nrm
-      .filter(col("nrm") > 0)
+    // zero-norm rows are dropped above the materialization, so the
+    // filter reads the materialized nrm rather than being pushed down
+    // over the raw scan, where it re-derived the quantize chain
+    val b = lshBuckets(emb).filter(col("nrm") > 0)
     val pairs = b.filter(queryPred).as("x").join(b.as("y"),
         col("x.bucket") === col("y.bucket") && col("x.vec_id") =!= col("y.vec_id"))
       .select(col("x.vec_id").as("query_id"), col("y.vec_id").as("nb_id"),
@@ -500,6 +480,26 @@ object Similarity {
           / (col("x.nrm") * col("y.nrm"))).as("cos"))
     rankTopK(pairs, "nb_id", k)
   }
+
+  /** (vec_id, qv, nrm, bucket) materialized ONCE per embeddings frame
+    * (callers pass [[graft.Tables.embeddingsShared]], so sim_lsh and
+    * the recall audit share it): an unmaterialized bucket chain
+    * re-derived the interpreted quantize transform from the parquet
+    * scan inside every consumer branch (both join sides and the
+    * query-side filter — 4 copies in the r15 plan); after
+    * materialization every stage is codegen over primitive arrays. */
+  private val lshBucketMemo = new graft.functions.FrameMemo
+  private def lshBuckets(emb: DataFrame): DataFrame =
+    lshBucketMemo.getOrBuild(emb) {
+      val planes = 8
+      val flat: Seq[Long] =
+        (0 until planes).flatMap(j => (1 to 64).map(i1 => planeWeightValue(j, i1)))
+      withNorm(emb)
+        .select(col("vec_id"), col("qv"), col("nrm"),
+          element_at(VectorOps.lshBandSignature(col("qv"), flat, 1, planes), 1)
+            .as("bucket"))
+        .localCheckpoint(true)
+    }
 
   /** ANN recall audit — the acceptance test of the bucketed path run
     * AS a query: for each sampled query, how many of its true

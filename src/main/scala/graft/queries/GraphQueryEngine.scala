@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.functions.KeyedFrameMemo
 import graft.graph.Traversal
 import graft.importer.BinaryGraph
 import graft.search.Fulltext
@@ -176,14 +177,14 @@ class GraphQueryEngine(g: BinaryGraph) {
     (f.ids, f.e)
   }
 
-  /** Release every scope memo: unpersist the cached frames and the
-    * edge projections [[Traversal]] and [[graft.graph.Ranking]]
-    * memoized for them. The engine remains usable — the next query
+  /** Release every scope memo: unpersist the cached frames, and drop
+    * every memo entry keyed by a scope's edge frame (the traversal
+    * projections, the triangle family's adjacency, …) with its
+    * checkpoint blocks. The engine remains usable — the next query
     * rebuilds its scope. */
   def close(): Unit = scopes.synchronized {
     scopes.values.flatMap(_.frames).foreach { f =>
-      Traversal.release(f.e)
-      graft.graph.Ranking.release(f.e)
+      KeyedFrameMemo.release(f.e)
       f.calls.unpersist()
       f.ids.unpersist()
       f.e.unpersist()

@@ -83,7 +83,7 @@ object PipelineEntries {
         threshold = AutoTau, bands = AutoBanding._1, planesPerBand = AutoBanding._2)),
     "sim_topk" -> ((s, d) =>
       Similarity.topKCosine(Tables.embeddingsShared(s, d), col("vec_id") % 100 === 0)),
-    "sim_lsh" -> ((s, d) => Similarity.lshTopK(Tables.embeddings(s, d))),
+    "sim_lsh" -> ((s, d) => Similarity.lshTopK(Tables.embeddingsShared(s, d))),
     "sim_ivf" -> ((s, d) =>
       Similarity.ivfTopK(Tables.embeddings(s, d), col("vec_id") % 100 === 0)),
     "text_langid" -> ((s, d) => TextAnalysis.langId(Tables.documentsShared(s, d))),

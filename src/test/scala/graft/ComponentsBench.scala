@@ -2,15 +2,15 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.graph.{Components, Pregel}
+import graft.graph.Components
 
 /** One-off experiment (sbt Test/runMain graft.ComponentsBench): the
-  * label-propagation vs GraphX-Pregel crossover that motivates
+  * label-propagation vs alternating-star crossover that motivates
   * Components.auto. Label propagation pays one shuffle round per hop
-  * of graph diameter; Pregel amortizes supersteps inside GraphX's
-  * message-passing loop. Expectation: LP wins on low-diameter graphs
-  * (hierarchies, hub-y call graphs), Pregel on long paths. Numbers go
-  * to SURVEY.md.
+  * of graph diameter; the star engine converges in O(log n) rounds.
+  * Expectation: LP wins on low-diameter graphs (hierarchies, hub-y
+  * call graphs), the star engine on long paths. Numbers go to
+  * SURVEY.md.
   */
 object ComponentsBench {
   def main(args: Array[String]): Unit = {
@@ -26,11 +26,8 @@ object ComponentsBench {
         .cache(); path.count()
       val tLp = time(Components.labelPropagation(path, maxIter = len + 2).count())
       val tStar = time(Components.alternatingStar(path).count())
-      val tPregel = if (len <= 60)
-        time(Pregel.connectedComponents(spark, path).count())
-      else (-1.0, 0L)._1 // 189 s at 300 hops (RDD lineage per superstep) — measured once, skipped since
       val tAuto = time(Components.auto(path, lpRoundBudget = 8).count())
-      println(f"path len=$len%3d  label-prop=$tLp%6.2fs  star=$tStar%6.2fs  pregel=$tPregel%6.2fs  auto=$tAuto%6.2fs")
+      println(f"path len=$len%3d  label-prop=$tLp%6.2fs  star=$tStar%6.2fs  auto=$tAuto%6.2fs")
       path.unpersist()
     }
     // wide low-diameter graph: 100k leaves on 100 hubs, hubs on one
@@ -41,9 +38,8 @@ object ComponentsBench {
       .cache(); wide.count()
     val tLpW = time(Components.labelPropagation(wide).count())
     val tStarW = time(Components.alternatingStar(wide).count())
-    val tPregelW = time(Pregel.connectedComponents(spark, wide).count())
     val tAutoW = time(Components.auto(wide).count())
-    println(f"wide 100k/diam=4   label-prop=$tLpW%6.2fs  star=$tStarW%6.2fs  pregel=$tPregelW%6.2fs  auto=$tAutoW%6.2fs")
+    println(f"wide 100k/diam=4   label-prop=$tLpW%6.2fs  star=$tStarW%6.2fs  auto=$tAutoW%6.2fs")
     spark.stop()
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.TextOps
+import graft.functions.KeyedFrameMemo
 
 /** Pins the BYTE budget on memo residency (r11 verdict #3): the
   * block manager charges storage in bytes, so eviction is driven by
@@ -26,9 +26,9 @@ class MemoBudgetSpec extends AnyFunSuite {
   test("frameBytes sees a checkpointed frame's storage; 0 for lazy plans") {
     val s = spark
     val ck = bulky(s, 0)
-    assert(TextOps.KeyedFrameMemo.frameBytes(ck) > 100000L,
+    assert(KeyedFrameMemo.frameBytes(ck) > 100000L,
       "checkpointed frame must report its block bytes")
-    assert(TextOps.KeyedFrameMemo.frameBytes(s.range(5).toDF("x")) == 0L,
+    assert(KeyedFrameMemo.frameBytes(s.range(5).toDF("x")) == 0L,
       "a plain lazy scan has no LogicalRDD blocks")
   }
 
@@ -37,8 +37,8 @@ class MemoBudgetSpec extends AnyFunSuite {
     val prev = sys.props.get("graft.memo.budget.mb")
     sys.props("graft.memo.budget.mb") = "3" // ~2 bulky frames
     try {
-      val memoA = new TextOps.KeyedFrameMemo[String]
-      val memoB = new TextOps.KeyedFrameMemo[String]
+      val memoA = new KeyedFrameMemo[String]
+      val memoB = new KeyedFrameMemo[String]
       val first = memoA.getOrBuild("old") { bulky(s, 1) }
       memoB.getOrBuild("mid") { bulky(s, 2) }
       // each frame is >1.5 MB, so by the third build the ledger is
@@ -62,7 +62,7 @@ class MemoBudgetSpec extends AnyFunSuite {
     val prev = sys.props.get("graft.memo.budget.mb")
     sys.props("graft.memo.budget.mb") = "3" // ~2 bulky frames
     try {
-      val memo = new TextOps.KeyedFrameMemo[String]
+      val memo = new KeyedFrameMemo[String]
       // oldest entry, checkpointed (so its bytes register) but far
       // below the 1 MiB sweep floor — the r15 sf10 rerank-frame shape
       val tiny = memo.getOrBuild("tiny") {
@@ -90,8 +90,8 @@ class MemoBudgetSpec extends AnyFunSuite {
       // observable properties, not the implementation expression:
       // never below the 6 GiB floor, never below a quarter of the
       // heap the operator was given (r15 advice #4)
-      assert(TextOps.KeyedFrameMemo.budgetBytes >= (6L << 30))
-      assert(TextOps.KeyedFrameMemo.budgetBytes >=
+      assert(KeyedFrameMemo.budgetBytes >= (6L << 30))
+      assert(KeyedFrameMemo.budgetBytes >=
         Runtime.getRuntime.maxMemory / 4)
     } finally {
       prev.foreach(v => sys.props("graft.memo.budget.mb") = v)
@@ -103,7 +103,7 @@ class MemoBudgetSpec extends AnyFunSuite {
     val prev = sys.props.get("graft.memo.budget.mb")
     sys.props("graft.memo.budget.mb") = "0"
     try {
-      val memo = new TextOps.KeyedFrameMemo[String]
+      val memo = new KeyedFrameMemo[String]
       val f = memo.getOrBuild("huge") { bulky(s, 5) }
       val same = memo.getOrBuild("huge") { fail("just-built frame must be served") }
       assert(same eq f)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.TextOps
+import graft.functions.KeyedFrameMemo
 
 /** Pins the memo-handle lifetime guarantee (r10 verdict #5): a plan
   * composed from a memoized checkpointed frame must stay executable
@@ -20,7 +20,7 @@ class MemoChurnSpec extends AnyFunSuite {
   lazy val spark: SparkSession = GraftSession.local(4)
 
   test("a composed plan survives 300 evicting builds + GC before execution") {
-    val memo = new TextOps.KeyedFrameMemo[String]
+    val memo = new KeyedFrameMemo[String]
     val s = spark
     val handle = memo.getOrBuild("pinned") {
       s.range(100).toDF("x").localCheckpoint(true)
@@ -43,7 +43,7 @@ class MemoChurnSpec extends AnyFunSuite {
   }
 
   test("an evicted frame with no consumer is actually dropped from the memo") {
-    val memo = new TextOps.KeyedFrameMemo[String]
+    val memo = new KeyedFrameMemo[String]
     val s = spark
     val ids = (1 to 70).map { i =>
       val f = memo.getOrBuild(s"k$i") {

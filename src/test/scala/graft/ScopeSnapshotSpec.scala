@@ -22,7 +22,7 @@ import graft.queries.GraphQueryEngine
   * unresolved call, an unparseable and a decimal call offset, two calls
   * at one call site, and functions with no calls.
   */
-class ScopeSnapshotSpec extends AnyFunSuite {
+class ScopeSnapshotSpec extends AnyFunSuite with PersistedRdds {
   lazy val spark: SparkSession = GraftSession.local(4)
 
   private case class Bin(hash: String, name: String, fns: Seq[(String, Int)],
@@ -196,11 +196,6 @@ class ScopeSnapshotSpec extends AnyFunSuite {
     } finally e.close()
   }
 
-  /** RDD ids persisted now and not in `before`. */
-  private def persistedSince(before: Set[Int]): Map[Int, String] =
-    spark.sparkContext.getPersistentRDDs.iterator.filterNot(kv => before(kv._1))
-      .map { case (id, r) => id -> r.toDebugString.linesIterator.next() }.toMap
-
   /** A callgraph on a new engine, then `close()`: the RDD ids it
     * persisted. */
   private def callgraphThenClose(): Set[Int] = {
@@ -210,19 +205,6 @@ class ScopeSnapshotSpec extends AnyFunSuite {
     val persisted = persistedSince(before).keySet
     e.close()
     persisted
-  }
-
-  /** Polls with `System.gc()` until no RDD persisted since `before`
-    * is left, then asserts so: a checkpoint that belongs to no memo
-    * (a bfs level, reciprocity's edge set) goes once it is garbage. */
-  private def assertReleased(before: Set[Int]): Unit = {
-    val deadline = System.nanoTime + 60L * 1000 * 1000 * 1000
-    while (persistedSince(before).nonEmpty && System.nanoTime < deadline) {
-      System.gc()
-      Thread.sleep(200)
-    }
-    val left = persistedSince(before)
-    assert(left.isEmpty, s"still persisted: ${left.toSeq.sorted.mkString("; ")}")
   }
 
   test("close() after a distributed callgraph leaves no persisted RDD behind") {
