@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Cross-engine deterministic text hashing and tokenization.
   *
@@ -71,8 +72,20 @@ object TextOps {
     * window entirely, one narrow explode. */
   def tokensBag(docs: DataFrame): DataFrame =
     docs
-      .select(col("doc_id"), explode(split(lower(col("text")), "[^a-z0-9]+")).as("token"))
+      .select(col("doc_id"), explode(tokenSplit(col("text"))).as("token"))
       .filter(col("token") =!= "")
+
+  /** The tokenizer's split: lowercase, then split on non-alphanumerics.
+    * Its empty pieces are not tokens; every caller drops them. */
+  def tokenSplit(text: Column): Column = split(lower(text), "[^a-z0-9]+")
+
+  /** Spark's ascending string order: nulls first, then UTF-8 bytes
+    * (`UTF8String.compareTo`, which differs from `String.compareTo`
+    * past the Basic Multilingual Plane). */
+  val sparkOrder: Ordering[String] = (a, b) =>
+    if (a == null) { if (b == null) 0 else -1 }
+    else if (b == null) 1
+    else UTF8String.fromString(a).compareTo(UTF8String.fromString(b))
 
   /** Tokenize to (doc_id, token, seq): lowercase, split on
     * non-alphanumeric, drop empties, renumber 1..n per doc. The
@@ -80,7 +93,7 @@ object TextOps {
     * natural partition unit so this never wide-shuffles. */
   def tokens(docs: DataFrame): DataFrame =
     docs
-      .select(col("doc_id"), posexplode(split(lower(col("text")), "[^a-z0-9]+")))
+      .select(col("doc_id"), posexplode(tokenSplit(col("text"))))
       .toDF("doc_id", "pos", "token")
       .filter(col("token") =!= "")
       .withColumn("seq",

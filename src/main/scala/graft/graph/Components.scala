@@ -28,11 +28,11 @@ object Components {
     * reached within `maxIter` (false ⇒ the graph's diameter exceeds
     * the round budget — [[auto]] uses this to switch engines). */
   private def propagate(edges: DataFrame, maxIter: Int): (DataFrame, Boolean) = {
-    // every iteration probes the symmetric frame on b; distinct()
-    // would checkpoint it partitioned on (a, b), forcing a full edge
-    // re-exchange per round — one pinned hash-partition on b (the
-    // reachLevels amortization) makes each round exchange only the
-    // 1-row-per-node label frame
+    // every iteration probes the symmetric frame on b, so it is
+    // hash-partitioned on b once, meant to make each round exchange
+    // only the 1-row-per-node label frame. On Spark 4.1 with AQE the
+    // localCheckpoint does NOT keep that partitioning, so each round
+    // still re-exchanges the edges (ROADMAP item 1, partition pinning)
     val und = edges.select(col("src").cast("long").as("a"), col("dst").cast("long").as("b"))
       .unionByName(edges.select(col("dst").cast("long").as("a"), col("src").cast("long").as("b")))
       .distinct()
@@ -171,8 +171,9 @@ object Components {
     * would just entrench the initial label). Returns (node, community).
     */
   def communities(edges: DataFrame, rounds: Int = 4): DataFrame = {
-    // probed on b every round — pinned hash-partition once (the
-    // propagate() amortization)
+    // probed on b every round — hash-partitioned once, as in
+    // propagate(), and re-exchanged each round all the same: the
+    // localCheckpoint drops the partitioning (ROADMAP item 1)
     val und = edges.select(col("src").cast("long").as("a"), col("dst").cast("long").as("b"))
       .unionByName(edges.select(col("dst").cast("long").as("a"), col("src").cast("long").as("b")))
       .filter(col("a") =!= col("b"))

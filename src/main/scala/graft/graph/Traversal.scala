@@ -528,13 +528,15 @@ object Traversal {
     * independently and sum. */
   private def reachRounds(edges: DataFrame, starts: DataFrame,
       maxDepth: Int): Seq[DataFrame] = {
-    // hash-partition the edge set on the join key ONCE — localCheckpoint
-    // preserves outputPartitioning through LogicalRDD, so every later
-    // level's frontier⋈edges join exchanges only the (small) frontier,
-    // not the full edge set again. Pinned partition count (not
-    // repartition(col)) so AQE cannot coalesce it into a shape the
-    // join must re-exchange. Only worth it when ≥3 levels amortize
-    // the up-front exchange; shallow walks use the edge frame as-is.
+    // hash-partition the edge set on the join key ONCE, meant to let
+    // every later level's frontier⋈edges join exchange only the
+    // (small) frontier. On Spark 4.1 with AQE the localCheckpoint does
+    // NOT keep that partitioning (its scan reports
+    // UnknownPartitioning), so each level still re-exchanges the whole
+    // edge set; ROADMAP item 1 (partition pinning) is the fix. Pinned
+    // partition count (not repartition(col)) so AQE cannot coalesce it
+    // into a shape the join must re-exchange. Shallow walks use the
+    // edge frame as-is.
     // the memo makes the prepared frame FREE for every caller after
     // the first, so even 2-level walks ride it (the recursion-groups
     // maxDepth=2 case paid a full edge exchange per level without it)

@@ -5,10 +5,12 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType, StructField,
+  StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.KeyedFrameMemo
+import graft.functions.TextOps.sparkOrder
 import graft.graph.Traversal
 import graft.importer.BinaryGraph
 import graft.search.Fulltext
@@ -19,20 +21,26 @@ import graft.search.Fulltext
   * callgraph|call-path|xrefs` and `database stats`.
   *
   * Binary scoping mirrors the Cypher `(b)-[:CONTAINS|IMPORTS]->(f)`
-  * pattern as a semi-join against the membership edges. Each binary
-  * scope keeps one memo until [[close]]:
+  * pattern: a scope is the functions its binaries contain or import.
+  * Each binary scope keeps one memo until [[close]]:
   *  - a driver-side [[GraphQueryEngine.Snapshot]] of the scope's
-  *    function and call rows, when both fit under Spark's own
+  *    function and call rows; from the first [[xrefs]] on, the store's
+  *    import rows of the scope's call ends; from the first string
+  *    query on, the scope's [[GraphQueryEngine.Strings]]. Each part is collected by scans
+  *    filtered on the scope's binary hashes or function uids (no join,
+  *    no shuffle) when it fits under Spark's own
   *    `spark.sql.autoBroadcastJoinThreshold` (what Spark would ship
   *    whole to every task anyway). `queryFunctions`, `callgraph`,
   *    `callPaths`, `analyzeCallContext`, `callSequences`,
-  *    `callerSequences`, `findRecursion` and `callFrequencies` answer
-  *    from it in plain Scala as local DataFrames, so a warm scope runs
-  *    no Spark job;
+  *    `callerSequences`, `findRecursion`, `callFrequencies`, `xrefs`,
+  *    `queryStrings` and `queryStringsExact` answer from it in plain
+  *    Scala as local DataFrames, so a warm scope runs no Spark job;
   *  - otherwise (a larger scope, a threshold of -1, or two uids whose
   *    xxhash64 ids collide) cached (calls, ids, edges) frames, over
   *    which the numeric-id [[Traversal]] primitives run distributed.
   *    The whole-graph analytics always use these frames.
+  * `queryStringsRaw`, `queryBinaryInfo` and `stats` always run
+  * distributed.
   */
 class GraphQueryEngine(g: BinaryGraph) {
   import GraphQueryEngine._
@@ -101,11 +109,21 @@ class GraphQueryEngine(g: BinaryGraph) {
     lazy val edges: Long = e.count()
   }
 
-  /** One binary scope's memo. The snapshot is tried once, on the first
-    * call that can use it (`None`: the scope does not fit); the frames
-    * are built on the first call that needs them. */
+  /** One binary scope's memo. Each driver-side part is collected once,
+    * on the first call that uses it (`None`: it does not fit): the
+    * filter on the scope's binary hashes, the call-graph [[Snapshot]],
+    * the import rows that only [[xrefs]] reads, and the [[Strings]]
+    * that only string queries read. The frames are built on the first
+    * call that needs them. */
   private final class ScopeMemo(binary: Option[String]) {
-    lazy val snapshot: Option[Snapshot] = buildSnapshot(binary)
+    lazy val inScope: Option[Column => Column] = binaryFilter(binary)
+    lazy val snapshot: Option[Snapshot] = inScope.flatMap(buildSnapshot(binary, _))
+    /** The store's (function_uid, address) import rows of the
+      * snapshot's call ends, from every binary that imports them. */
+    lazy val imports: Option[Array[Row]] = snapshot.flatMap(s =>
+      bounded(g.importsFn.filter(col("function_uid").isInCollection(s.ids.keySet))
+        .select(col("function_uid"), col("address"))))
+    lazy val strings: Option[Strings] = inScope.flatMap(buildStrings)
     var frames: Option[Frames] = None
   }
 
@@ -117,6 +135,12 @@ class GraphQueryEngine(g: BinaryGraph) {
 
   private def snapshot(binary: Option[String]): Option[Snapshot] =
     scopes.synchronized(memo(binary).snapshot)
+
+  private def strings(binary: Option[String]): Option[Strings] =
+    scopes.synchronized(memo(binary).strings)
+
+  private def withImports(binary: Option[String]): Option[(Snapshot, Array[Row])] =
+    scopes.synchronized { val m = memo(binary); m.snapshot.zip(m.imports) }
 
   private def frames(binary: Option[String]): Frames = scopes.synchronized {
     val m = memo(binary)
@@ -131,27 +155,69 @@ class GraphQueryEngine(g: BinaryGraph) {
   private def offsetOf(c: Column): Column =
     coalesce(graft.importer.Addresses.parseAddress(c), lit(0L))
 
+  /** `df`'s rows when at most `cap` of them, where `cap` is how many
+    * rows of the frame's default row size fit under
+    * `spark.sql.autoBroadcastJoinThreshold`; `None` when over the cap,
+    * or when the threshold is negative (Spark ships nothing whole).
+    * When Spark's own size estimate of `df` (its input files' size, as
+    * the broadcast rule reads it) is under the threshold, one job
+    * collects it whole; otherwise a `limit(cap + 1)` keeps the driver's
+    * share bounded, at the cost of Spark's take scanning a few files
+    * per job. */
+  private def bounded(df: DataFrame): Option[Array[Row]] = {
+    val threshold = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    if (threshold < 0) None
+    else {
+      val cap = math.min(threshold / df.schema.defaultSize, Int.MaxValue - 1L).toInt
+      val fits = df.queryExecution.optimizedPlan.stats.sizeInBytes <= threshold
+      Some((if (fits) df else df.limit(cap + 1)).collect()).filter(_.length <= cap)
+    }
+  }
+
+  /** A filter over `c` that keeps the non-null values of `rows`' first
+    * column: a literal set, so a scan applies it without a join. */
+  private def isIn(rows: Array[Row])(c: Column): Column =
+    c.isInCollection(rows.iterator.map(_.getString(0)).filter(_ != null).toSet)
+
+  /** The scope's filter on a `binary_hash` column: every binary, or the
+    * collected hashes `--binary` matches (`None` when over the cap). */
+  private def binaryFilter(binary: Option[String]): Option[Column => Column] = binary match {
+    case None => Some(_ => lit(true))
+    case Some(b) => bounded(binaryMatches(b)).map(isIn)
+  }
+
   /** The scope's function rows and its call rows (with the parsed
-    * offset), each one action capped at `cap + 1` rows, where `cap` is
-    * how many rows of the frame's default row size fit under
-    * `spark.sql.autoBroadcastJoinThreshold`. `None` when either side
-    * is over its cap, the threshold is negative (Spark ships nothing
-    * whole), or two uids collide. */
-  private def buildSnapshot(binary: Option[String]): Option[Snapshot] = {
-    val threshold = g.calls.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-    def bounded(df: DataFrame): Option[Array[Row]] =
-      if (threshold < 0) None
-      else {
-        val cap = math.min(threshold / df.schema.defaultSize, Int.MaxValue - 1L).toInt
-        Some(df.limit(cap + 1).collect()).filter(_.length <= cap)
-      }
+    * offset). A binary scope collects its function uids from
+    * `contains` ∪ `importsFn` first, and both parts are scans filtered
+    * by that uid set, so the build shuffles nothing. `None` when a part
+    * is over its cap or two uids collide. */
+  private def buildSnapshot(binary: Option[String],
+      inScope: Column => Column): Option[Snapshot] = {
+    def members(t: DataFrame) = t.filter(inScope(col("binary_hash"))).select(col("function_uid"))
+    val inUids: Option[Column => Column] =
+      if (binary.isEmpty) Some(_ => lit(true))
+      else bounded(members(g.contains).unionByName(members(g.importsFn))).map(isIn)
     for {
-      fns <- bounded(g.functions.join(scopeUids(binary), Seq("uid"), "left_semi"))
-      calls <- bounded(scopedCalls(binary).select(col("from_uid"), col("to_uid"),
-        col("call_offset"), col("call_type"), offsetOf(col("call_offset")).as("offset")))
+      in <- inUids
+      fns <- bounded(g.functions.filter(in(col("uid"))))
+      calls <- bounded(g.calls.filter(in(col("from_uid")) && in(col("to_uid")))
+        .select(col("from_uid"), col("to_uid"), col("call_offset"), col("call_type"),
+          offsetOf(col("call_offset")).as("offset")))
       s <- Snapshot(fns, calls, uidAt)
     } yield s
   }
+
+  /** The scope's `contains_string` rows and the `strings` rows they
+    * name, each one capped scan (`None` when either is over its cap). */
+  private def buildStrings(inScope: Column => Column): Option[Strings] = for {
+    held <- bounded(g.containsString.filter(inScope(col("binary_hash")))
+      .select(col("string_uid"), col("binary_hash")))
+    docs <- bounded(g.strings.filter(isIn(held)(col("uid"))).select(col("uid"), col("value")))
+  } yield new Strings(Fulltext.LocalIndex(g.strings.sparkSession,
+      docs.toSeq.map(r => r.getString(0) -> r.getString(1))),
+    docs.groupBy(_.getString(0)),
+    held.groupBy(_.getString(0)).view
+      .mapValues(_.iterator.map(_.getString(1)).filter(_ != null).toSet.size.toLong).toMap)
 
   /** Long ids for traversal: (uid, id) dictionary via xxhash64 —
     * embarrassingly parallel (a dense_rank over a global window would
@@ -370,25 +436,38 @@ class GraphQueryEngine(g: BinaryGraph) {
         .orderBy("call_type", "depth")
   }
 
-  /** `query xrefs <address>` (importer.rs:552-602): calls touching a
-    * function at the given (normalized) address, plus import-table
-    * address hits. */
+  /** `query xrefs <address>` (importer.rs:552-602): the scope's calls
+    * touching a function at the given (normalized) address, or an
+    * import that any binary's import table lists at it. */
   def xrefs(address: String, binary: Option[String] = None): DataFrame = {
-    val norm = graft.importer.Addresses
-    val target = g.functions
-      .filter(col("address") === norm.normalizeAddressLit(address))
-      .select(col("uid"))
-      .unionByName(g.importsFn
-        .filter(col("address") === norm.normalizeAddressLit(address))
-        .select(col("function_uid").as("uid")))
-      .distinct()
-    scopedCalls(binary)
-      .join(broadcast(target.withColumnRenamed("uid", "t")),
-        col("from_uid") === col("t") || col("to_uid") === col("t"))
-      .select(col("from_uid").as("from_function"), col("to_uid").as("to_function"),
-        col("call_offset"))
-      .distinct()
-      .orderBy("from_function", "to_function")
+    val norm = graft.importer.Addresses.normalizeAddressLit(address)
+    withImports(binary) match {
+      case Some((s, imports)) =>
+        // Spark's own normalization, folded by the optimizer: no job
+        val at = local(StructType(Nil), Seq(Row())).select(norm).collect().head.getString(0)
+        val targets =
+          if (at == null) Set.empty[String]
+          else (s.fns.iterator.filter(_.getString(addressAt) == at).map(_.getString(uidAt)) ++
+            imports.iterator.filter(_.getString(1) == at).map(_.getString(0))).toSet - null
+        local(StructType(Seq(callField("from_uid", "from_function"),
+            callField("to_uid", "to_function"), callField("call_offset", "call_offset"))),
+          s.calls.toSeq.filter(r => targets(r.getString(0)) || targets(r.getString(1)))
+            .map(r => Row(r.getString(0), r.getString(1), r.getString(2))).distinct
+            .sortBy(r => (r.getString(0), r.getString(1), r.getString(2)))(
+              Ordering.Tuple3(sparkOrder, sparkOrder, sparkOrder)))
+      case None =>
+        val target = g.functions.filter(col("address") === norm).select(col("uid"))
+          .unionByName(g.importsFn.filter(col("address") === norm)
+            .select(col("function_uid").as("uid")))
+          .distinct()
+        scopedCalls(binary)
+          .join(broadcast(target.withColumnRenamed("uid", "t")),
+            col("from_uid") === col("t") || col("to_uid") === col("t"))
+          .select(col("from_uid").as("from_function"), col("to_uid").as("to_function"),
+            col("call_offset"))
+          .distinct()
+          .orderBy("from_function", "to_function", "call_offset")
+    }
   }
 
   private def scopedStrings(binary: Option[String]): (DataFrame, DataFrame) = {
@@ -402,6 +481,13 @@ class GraphQueryEngine(g: BinaryGraph) {
       .select(col("uid").as("doc_id"), col("value").as("text"))
     (scoped, docs)
   }
+
+  /** The string rows of ranked (uid, score) hits, with each string's
+    * `sample_count`, as [[withSampleCount]] joins them. */
+  private def stringRows(s: Strings, hits: Seq[(String, Double)]): DataFrame =
+    local(StructType(Seq(g.strings.schema("uid"), g.strings.schema("value"),
+        StructField("score", DoubleType), StructField("sample_count", LongType, false))),
+      hits.flatMap { case (u, score) => s.values(u).map(r => Row(u, r.get(1), score, s.samples(u))) })
 
   private def withSampleCount(hits: DataFrame, scoped: DataFrame): DataFrame = {
     val sampleCount = scoped.groupBy(col("string_uid").as("doc_id"))
@@ -419,16 +505,20 @@ class GraphQueryEngine(g: BinaryGraph) {
     * is an infix wildcard `*term*`, terms AND-joined — so
     * `--pattern bitcoin` matches "bitcoinwallet_v2". */
   def queryStrings(terms: Seq[String], binary: Option[String] = None,
-      limit: Int = 100): DataFrame = {
-    val (scoped, docs) = scopedStrings(binary)
-    withSampleCount(Fulltext.containsSearch(docs, terms, limit), scoped)
+      limit: Int = 100): DataFrame = strings(binary) match {
+    case Some(s) => stringRows(s, s.index.containsSearch(terms, limit))
+    case None =>
+      val (scoped, docs) = scopedStrings(binary)
+      withSampleCount(Fulltext.containsSearch(docs, terms, limit), scoped)
   }
 
   /** Exact-token variant of [[queryStrings]] (no wildcards). */
   def queryStringsExact(terms: Seq[String], binary: Option[String] = None,
-      limit: Int = 100): DataFrame = {
-    val (scoped, docs) = scopedStrings(binary)
-    withSampleCount(Fulltext.search(docs, terms, limit), scoped)
+      limit: Int = 100): DataFrame = strings(binary) match {
+    case Some(s) => stringRows(s, s.index.search(terms, limit))
+    case None =>
+      val (scoped, docs) = scopedStrings(binary)
+      withSampleCount(Fulltext.search(docs, terms, limit), scoped)
   }
 
   /** Per-callee direct call frequency of a function
@@ -714,19 +804,17 @@ object GraphQueryEngine {
     }
   }
 
+  /** A binary scope's strings held on the driver: the index of its
+    * `strings` rows, those rows by uid, and each uid's `sample_count`
+    * (the distinct binaries of the scope that hold it). */
+  private final class Strings(val index: Fulltext.LocalIndex,
+      val values: Map[String, Array[Row]], val samples: Map[String, Long])
+
   private val Seed = 42L
 
   /** Spark's `xxhash64(uid)` of one string column, bit for bit. */
   private def xxhash64Of(s: String): Long =
     XXH64.hashUTF8String(UTF8String.fromString(s), Seed)
-
-  /** Spark's ascending string order: nulls first, then UTF-8 bytes
-    * (`UTF8String.compareTo`, which differs from `String.compareTo`
-    * past the Basic Multilingual Plane). */
-  private val sparkOrder: Ordering[String] = (a, b) =>
-    if (a == null) { if (b == null) 0 else -1 }
-    else if (b == null) 1
-    else UTF8String.fromString(a).compareTo(UTF8String.fromString(b))
 
   /** Minimum-depth BFS from `starts` up to `maxDepth` hops, as
     * (node, depth ≥ 1); a start is never reported. [[Traversal.bfs]]

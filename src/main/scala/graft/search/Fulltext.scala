@@ -1,7 +1,10 @@
 package graft.search
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructField, StructType}
 
 import graft.functions.TextOps
 
@@ -86,6 +89,14 @@ object Fulltext {
         .agg(sum(col("n")).cast("long").as("n")))
   }
 
+  /** A posting's tf-idf weight in a corpus of `n` docs, `df` of which
+    * hold its token. */
+  private def weight(tf: Column, df: Column, n: Column): Column =
+    tf * log((n + 1.0) / (df + 1.0))
+
+  /** A doc's score from the sum of its postings' weights. */
+  private def scoreOf(weightSum: Column): Column = round(weightSum, 4)
+
   /** Shared scoring tail: score(doc) = Σ tf·ln((N+1)/(df+1)) over the
     * postings rows passing `tokenPred`; n_terms = matched distinct
     * tokens. The predicate lands on the postings scan (pushed to
@@ -98,7 +109,7 @@ object Fulltext {
       .crossJoin(broadcast(index.meta))
       .groupBy("doc_id")
       .agg(
-        round(sum(col("tf") * log((col("n") + 1.0) / (col("df") + 1.0))), 4).as("score"),
+        scoreOf(sum(weight(col("tf"), col("df"), col("n")))).as("score"),
         count(lit(1)).as("n_terms"))
       .orderBy(col("score").desc, col("doc_id"))
       .limit(limit)
@@ -187,8 +198,7 @@ object Fulltext {
     */
   def containsSearchIndex(index: FulltextIndex, terms: Seq[String],
       limit: Int = 20): DataFrame = {
-    require(terms.nonEmpty, "contains search needs at least one term")
-    val lower = terms.map(_.toLowerCase)
+    val lower = containsTerms(terms)
     val matched = index.postings.filter(
       lower.map(t => col("token").contains(t)).reduce(_ || _))
     val df = matched.groupBy("token").agg(count(lit(1)).as("df"))
@@ -199,7 +209,7 @@ object Fulltext {
       }: _*))
       .groupBy("doc_id")
       .agg(
-        round(sum(col("tf") * log((col("n") + 1.0) / (col("df") + 1.0))), 4).as("score"),
+        scoreOf(sum(weight(col("tf"), col("df"), col("n")))).as("score"),
         size(array_distinct(flatten(collect_list(filter(col("hits"), _.isNotNull)))))
           .as("n_terms"))
       .filter(col("n_terms") === lower.size)
@@ -209,6 +219,73 @@ object Fulltext {
 
   def containsSearch(docs: DataFrame, terms: Seq[String], limit: Int = 20): DataFrame =
     containsSearchIndex(buildIndex(docs), terms, limit)
+
+  /** The contains mode's terms, lowercased; at least one is required. */
+  private def containsTerms(terms: Seq[String]): Seq[String] = {
+    require(terms.nonEmpty, "contains search needs at least one term")
+    terms.map(_.toLowerCase)
+  }
+
+  /** A corpus small enough to hold on the driver, indexed there:
+    * [[LocalIndex.search]] and [[LocalIndex.containsSearch]] answer as
+    * [[search]] and [[containsSearch]] over the same docs do, with no
+    * Spark job. The tokens and the scores are the distributed path's
+    * own Column expressions ([[TextOps.tokenSplit]], `weight`,
+    * `scoreOf`), which the optimizer evaluates over local relations. */
+  final class LocalIndex private (spark: SparkSession,
+      tf: Map[String, Map[String, Long]], n: Long) {
+
+    /** (doc_id, score) of the top `limit` docs holding any term. */
+    def search(terms: Seq[String], limit: Int = 20): Seq[(String, Double)] =
+      ranked(terms.toSet, Nil, limit)
+
+    /** (doc_id, score) of the top `limit` docs in which every term is
+      * a substring of some token (`*term*`, terms AND-joined). */
+    def containsSearch(terms: Seq[String], limit: Int = 20): Seq[(String, Double)] = {
+      val lower = containsTerms(terms)
+      ranked(t => lower.exists(t.contains), lower, limit)
+    }
+
+    /** Docs scored over their postings whose token `matches` (df
+      * counted over those postings), kept when each of `required` is
+      * in one of their matched tokens, in (score desc, doc_id) order. */
+    private def ranked(matches: String => Boolean, required: Seq[String],
+        limit: Int): Seq[(String, Double)] = {
+      val hits = tf.iterator.map { case (d, ts) => d -> ts.filter(t => matches(t._1)) }
+        .filter(_._2.nonEmpty).toSeq
+      val df = hits.flatMap(_._2.keys).groupMapReduce(identity)(_ => 1L)(_ + _)
+      val kept = hits.filter { case (_, ts) => required.forall(r => ts.keys.exists(_.contains(r))) }
+      val posting = StructType(Seq(StructField("tf", LongType), StructField("df", LongType)))
+      val rows = kept.map { case (d, ts) =>
+        Row(d, ts.toSeq.map { case (t, f) => Row(f, df(t)) }, n)
+      }
+      spark.createDataFrame(rows.asJava, StructType(Seq(StructField("doc_id", StringType),
+          StructField("postings", ArrayType(posting)), StructField("n", LongType))))
+        .select(col("doc_id"), scoreOf(aggregate(col("postings"), lit(0.0),
+          (acc, p) => acc + weight(p("tf"), p("df"), col("n")))))
+        .collect().toSeq
+        .map(r => r.getString(0) -> r.getDouble(1))
+        .sortBy(h => (-h._2, h._1))(Ordering.Tuple2(Ordering.Double.TotalOrdering,
+          TextOps.sparkOrder))
+        .take(limit)
+    }
+  }
+
+  object LocalIndex {
+    /** The index of (doc_id, text) docs, tokenized by Spark's own
+      * expressions over a local relation. */
+    def apply(spark: SparkSession, docs: Seq[(String, String)]): LocalIndex = {
+      val split = spark.createDataFrame(docs.map { case (d, t) => Row(d, t) }.asJava,
+          StructType(Seq(StructField("doc_id", StringType), StructField("text", StringType))))
+        .select(col("doc_id"), TextOps.tokenSplit(col("text")))
+        .collect()
+      val tf = split.groupBy(_.getString(0)).map { case (d, rs) =>
+        d -> rs.iterator.filterNot(_.isNullAt(1)).flatMap(_.getSeq[String](1))
+          .filter(_.nonEmpty).toSeq.groupMapReduce(identity)(_ => 1L)(_ + _)
+      }
+      new LocalIndex(spark, tf, docs.size.toLong)
+    }
+  }
 
   // ---- char-n-gram vocabulary pre-filter for contains mode --------------
 
@@ -346,7 +423,7 @@ object Fulltext {
       .crossJoin(broadcast(index.meta))
       .groupBy("doc_id")
       .agg(
-        round(sum(col("tf") * log((col("n") + 1.0) / (col("df") + 1.0))), 4).as("score"),
+        scoreOf(sum(weight(col("tf"), col("df"), col("n")))).as("score"),
         array_distinct(flatten(collect_list(filter(col("atom_ids"), _.isNotNull))))
           .as("matched"))
     def sat(x: Q): Column = x match {

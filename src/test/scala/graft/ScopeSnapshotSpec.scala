@@ -6,27 +6,38 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.importer.{BinaryGraph, GraphStore, JsonImporter}
 import graft.queries.GraphQueryEngine
 
-/** The engine's two paths for binary-scoped call-graph queries: the
-  * driver-side scope snapshot (default broadcast threshold) and the
-  * distributed frames (`spark.sql.autoBroadcastJoinThreshold=-1`) must
-  * answer alike, a warm snapshot must start no Spark job, and `close()`
-  * must leave no cached frame behind.
+/** The engine's two paths for binary-scoped queries: the driver-side
+  * scope snapshot (default broadcast threshold) and the distributed
+  * frames (`spark.sql.autoBroadcastJoinThreshold=-1`) must answer
+  * alike, a cold scope's snapshot must build without a shuffle, a warm
+  * one must start no Spark job, and `close()` must leave no cached
+  * frame behind.
   *
   * The generated store has self-loops, 2-, 3- and 4-cycles, imports
   * shared across binaries, function names repeated across binaries, an
   * unresolved call, an unparseable and a decimal call offset, two calls
-  * at one call site, and functions with no calls.
+  * at one call site, two call sites between one pair of functions (a
+  * calls row the import would merge, added to the saved store as a
+  * per-call-site graph has it), and functions with no calls. Its
+  * strings include one held by two binaries, a repeated token, mixed
+  * case and punctuation, and non-ASCII letters.
   */
 class ScopeSnapshotSpec extends AnyFunSuite with PersistedRdds {
   lazy val spark: SparkSession = GraftSession.local(4)
 
   private case class Bin(hash: String, name: String, fns: Seq[(String, Int)],
-      imports: Seq[(String, String, Int)], calls: Seq[(Int, Int, String)])
+      imports: Seq[(String, String, Int)], calls: Seq[(Int, Int, String)],
+      strings: Seq[String])
 
   private val bins = Seq(
     Bin("a1a1", "alpha.exe",
@@ -37,18 +48,23 @@ class ScopeSnapshotSpec extends AnyFunSuite with PersistedRdds {
         (0x1100, 0x1200, "0x1110"), (0x1200, 0x1100, "0x1210"), (0x1200, 0x1200, "0x1214"),
         (0x1200, 0x1300, "0x1218"), (0x1300, 0x1100, "0x1310"), (0x1300, 0x1400, "0x1314"),
         (0x1400, 0x1000, "0x1410"), (0x1200, 0x9000, "zz"), (0x1400, 0x9008, "0x1418"),
-        (0x1700, 0x9000, "0x1710"), (0x1100, 0x999999, "0x1114"))),
+        (0x1700, 0x9000, "0x1710"), (0x1100, 0x999999, "0x1114")),
+      Seq("Connect to %s:%d failed", "retry, Retry later; RETRY-count=3",
+        "Grüße aus Köln", "http://c2.example/beacon?id=42")),
     Bin("b2b2", "beta.dll",
       Seq("main" -> 0x2000, "worker" -> 0x2100, "f2" -> 0x2200, "h" -> 0x2300),
       Seq(("CreateFileA", "KERNEL32.dll", 0x8000)),
       Seq((0x2000, 0x2100, "0x2010"), (0x2100, 0x2200, "0x2110"), (0x2200, 0x2300, "0x2210"),
         (0x2300, 0x2100, "0x2310"), (0x2200, 0x2000, "0x2214"), (0x2000, 0x8000, "0x2014"),
-        (0x2300, 0x8000, "0x2314"))),
+        (0x2300, 0x8000, "0x2314")),
+      Seq("Connect to %s:%d failed", "worker_thread#1 started (retry later)",
+        "naïve café config")),
     Bin("c3c3", "gamma.so",
       Seq("main" -> 0x3000, "f2" -> 0x3100, "lone" -> 0x3200),
       Seq(("send", "WS2_32.dll", 0x7000)),
       Seq((0x3000, 0x3100, "0x3010"), (0x3100, 0x3000, "0x3110"), (0x3000, 0x3000, "0x3014"),
-        (0x3100, 0x7000, "0x3114"))))
+        (0x3100, 0x7000, "0x3114")),
+      Seq("İstanbul ŞEHİR main loop", "main: connect")))
 
   private def hex(a: Int) = s"0x${a.toHexString}"
 
@@ -60,13 +76,15 @@ class ScopeSnapshotSpec extends AnyFunSuite with PersistedRdds {
         s"""{"name": "$n", "library": "$l", "address": "${hex(a)}"}""" }
       val calls = b.calls.map { case (f, t, o) =>
         s"""{"from_address": "${hex(f)}", "to_address": "${hex(t)}", "offset": "$o", "type": "direct"}""" }
+      val strings = (s"text of ${b.name}" +: b.strings).zipWithIndex.map { case (v, i) =>
+        s"""{"value": "$v", "address": "${hex(0x5000 + 16 * i)}"}""" }
       val json =
         s"""{
            |"binary_info": {"hashes": {"sha256": "${b.hash}"}, "name": "${b.name}",
            |  "file_path": "/x/${b.name}", "file_size": 4096,
            |  "file_type": {"type": "PE32", "architecture": "x86_64"}},
            |"functions": [${fns.mkString(",")}],
-           |"strings": [{"value": "text of ${b.name}", "address": "0x5000"}],
+           |"strings": [${strings.mkString(",")}],
            |"imports": [${imports.mkString(",")}],
            |"exports": [{"name": "main", "address": "${hex(b.fns.head._2)}"}],
            |"calls": [${calls.mkString(",")}]
@@ -76,7 +94,13 @@ class ScopeSnapshotSpec extends AnyFunSuite with PersistedRdds {
     // served from a saved store, as the CLI serves it: an imported
     // graph's plans would redo the whole JSON import in every action
     val store = dir.resolve("store").toString
-    GraphStore.save(JsonImporter.importAnalysis(spark, dir.toString), store, partitions = 2)
+    val imported = JsonImporter.importAnalysis(spark, dir.toString)
+    // a second call site from g to CreateFileA, reached from no asked
+    // function, so only xrefs sees the parallel edge
+    val site = imported.calls.filter(col("call_offset") === "0x1710")
+      .withColumn("call_offset", lit("0x1718"))
+    GraphStore.save(imported.copy(calls = imported.calls.unionByName(site)), store,
+      partitions = 2)
     GraphStore.load(spark, store)
   }
 
@@ -90,6 +114,8 @@ class ScopeSnapshotSpec extends AnyFunSuite with PersistedRdds {
     * once. `lone` has no calls at all. */
   private val asked = Seq(Some("alpha.exe") -> "f2", Some("beta.dll") -> "main",
     Some("gamma.so") -> "main", None -> "main", None -> "lone")
+
+  private val xrefKeys = Seq("from_function", "to_function", "call_offset")
 
   /** Every snapshot-served call on one engine, with the columns its
     * result is ordered by: (label, sort keys, query). */
@@ -108,6 +134,20 @@ class ScopeSnapshotSpec extends AnyFunSuite with PersistedRdds {
         ("recursion 6", Seq("call_type", "depth"), () => e.findRecursion(n, b, 6)),
         ("frequencies", Seq("callee_uid"), () => e.callFrequencies(n, b)))
         .map { case (l, k, q) => (s"$l($n, $b)", k, q) }
+    } ++ Seq(Some("alpha.exe"), None).flatMap { b =>
+      // an import address another binary also imports, an unknown one,
+      // and a non-canonical spelling
+      Seq(("strings(conn)", Seq("score", "uid"), () => e.queryStrings(Seq("conn"), b)),
+        ("strings(retry, LAT)", Seq("score", "uid"), () => e.queryStrings(Seq("retry", "LAT"), b)),
+        ("strings(zzz)", Seq("score", "uid"), () => e.queryStrings(Seq("zzz"), b)),
+        ("stringsExact(retry, text)", Seq("score", "uid"),
+          () => e.queryStringsExact(Seq("retry", "text"), b)),
+        ("xrefs(0x1200)", xrefKeys, () => e.xrefs("0x1200", b)),
+        ("xrefs(0x9000)", xrefKeys, () => e.xrefs("0x9000", b)),
+        ("xrefs(0x8000)", xrefKeys, () => e.xrefs("0x8000", b)),
+        ("xrefs(0xdead)", xrefKeys, () => e.xrefs("0xdead", b)),
+        ("xrefs(0X9000)", xrefKeys, () => e.xrefs("0X9000", b)))
+        .map { case (l, k, q) => (s"$l($b)", k, q) }
     }
 
   private def withThreshold[T](v: String)(body: => T): T = {
@@ -153,6 +193,12 @@ class ScopeSnapshotSpec extends AnyFunSuite with PersistedRdds {
       val rec = distributed("recursion 6(f2, Some(alpha.exe))")._2
       assert(rec.exists(_.getString(1) == "Direct") && rec.exists(_.getInt(2) > 4))
       assert(distributed("recursion 4(main, None)")._2.map(_.getString(0)).distinct.size == 3)
+      // the shared string, ranked hits, and both call sites of one pair
+      assert(distributed("strings(conn)(None)")._2.exists(_.getAs[Long]("sample_count") == 2L))
+      assert(distributed("strings(retry, LAT)(Some(alpha.exe))")._2.size == 1)
+      assert(distributed("stringsExact(retry, text)(None)")._2.size >= 4)
+      val sites = distributed("xrefs(0X9000)(Some(alpha.exe))")._2.map(_.getString(2))
+      assert(Set("0x1710", "0x1718").subsetOf(sites.toSet), sites)
     } finally e.close()
   }
 
@@ -183,11 +229,76 @@ class ScopeSnapshotSpec extends AnyFunSuite with PersistedRdds {
     started.asScala.count(_ == group)
   }
 
+  /** Executed plans of the Dataset actions `body` runs. A sentinel
+    * action run after it, once seen, proves every earlier one has
+    * reached the listener. */
+  private def plansOf(body: => Unit): Seq[SparkPlan] = {
+    val plans = new ConcurrentLinkedQueue[SparkPlan]()
+    val sentinel = s"sentinel_${java.util.UUID.randomUUID.toString.replace('-', '_')}"
+    val seen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.analyzed.output.exists(_.name == sentinel)) seen.countDown()
+        else plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      spark.sql(s"SELECT 1 AS $sentinel").collect()
+      assert(seen.await(30, java.util.concurrent.TimeUnit.SECONDS),
+        "listener never saw the sentinel query")
+    } finally spark.listenerManager.unregister(listener)
+    plans.asScala.toSeq
+  }
+
+  private object Stages extends AdaptiveSparkPlanHelper
+
+  /** The Spark jobs and the shuffles of `body`'s Dataset actions. */
+  private def jobsAndShuffles(body: => Unit): (Int, Seq[SparkPlan]) = {
+    var jobs = 0
+    val plans = plansOf { jobs = jobsOf(body) }
+    assert(plans.nonEmpty, "no Dataset action seen")
+    (jobs, plans.flatMap(p => Stages.collect(p) { case x: ShuffleExchangeExec => x }))
+  }
+
+  test("a cold scope's snapshot builds in at most 6 Spark jobs, with no shuffle") {
+    val e = new GraphQueryEngine(g)
+    try {
+      val (jobs, shuffles) = jobsAndShuffles(e.callgraph("main", Some("beta.dll")).collect())
+      assert(shuffles.isEmpty, shuffles.mkString("\n"))
+      assert(jobs <= 6, s"$jobs jobs")
+      // a string query on another cold scope collects only its strings
+      val (stringJobs, stringShuffles) =
+        jobsAndShuffles(e.queryStrings(Seq("main"), Some("gamma.so")).collect())
+      assert(stringShuffles.isEmpty, stringShuffles.mkString("\n"))
+      assert(stringJobs <= 3, s"$stringJobs jobs")
+      info(s"callgraph: $jobs jobs; strings: $stringJobs jobs")
+    } finally e.close()
+  }
+
+  test("a scope over its cap answers from the distributed path alike") {
+    // a 1-byte threshold caps every part at 0 rows: the capped limit
+    // scan finds a row, so nothing is held on the driver
+    val want = new GraphQueryEngine(g)
+    val capped = new GraphQueryEngine(g)
+    try {
+      def both(q: GraphQueryEngine => DataFrame) =
+        (result(q(want)), withThreshold("1")(result(q(capped))))
+      val (a, b) = both(_.xrefs("0x9000", Some("alpha.exe")))
+      assertSame("xrefs", xrefKeys, b, a)
+      assert(a._2.size == 3)
+      val (c, d) = both(_.queryStrings(Seq("retry"), Some("alpha.exe")))
+      assertSame("strings", Seq("score", "uid"), d, c)
+      assert(c._2.nonEmpty)
+    } finally { want.close(); capped.close() }
+  }
+
   test("a warm snapshot scope answers with zero Spark jobs; after close() it rebuilds") {
     val e = new GraphQueryEngine(g)
     try {
       val qs = queries(e).filter(_._1.contains("alpha.exe"))
-      assert(qs.size == 10)
+      assert(qs.size == 19)
       val first = qs.map { case (l, _, q) => l -> q().collect().toSeq }.toMap
       qs.foreach { case (l, _, q) => assert(jobsOf(q().collect()) == 0, l) }
       e.close()
