@@ -3,6 +3,7 @@ package graft.functions
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** The one cross-call frame cache: every shared artifact the library
@@ -115,12 +116,47 @@ private[graft] object KeyedFrameMemo {
     * the LogicalRDD leaf); a frame composed over another frame's
     * checkpoint is left alone, since those blocks are not its own. */
   private def unpersistCheckpoint(df: DataFrame): Unit =
+    unpersistLeaf(df)(Some(_).collect { case lr: LogicalRDD => lr })
+
+  /** Eagerly release a SUPERSEDED round frame's checkpoint blocks (the
+    * first checkpoint leaf of its plan): a checkpointed frame's
+    * storage lives behind its LogicalRDD leaf, invisible to the
+    * CacheManager, and otherwise lingers until the ContextCleaner
+    * happens to GC the reference — across a 190-query bench session
+    * that lingering storage is the observed multi-second GC-spike
+    * source. ONLY call on frames whose every consumer has already
+    * been eagerly materialized (the next round's checkpoint): the
+    * blocks are the frame's only substance, so a late consumer would
+    * have nothing to recompute from. Never on a memo's frame: the
+    * memo's LRU, or [[release]], releases those. */
+  private[graft] def releaseRound(df: DataFrame): Unit =
+    unpersistLeaf(df)(_.collectFirst { case lr: LogicalRDD => lr })
+
+  private def unpersistLeaf(df: DataFrame)(
+      leaf: LogicalPlan => Option[LogicalRDD]): Unit =
     try if (!df.sparkSession.sparkContext.isStopped)
-      df.queryExecution.analyzed match {
-        case lr: LogicalRDD => lr.rdd.unpersist(false); ()
-        case _ => ()
-      }
+      leaf(df.queryExecution.analyzed).foreach(_.rdd.unpersist(false))
     catch { case _: Exception => () }
+
+  /** The fixed-round loop: `rounds` applications of `step` from
+    * `init`, each round checkpointed, so round t never re-derives
+    * t−1, and the round it superseded released as soon as it is
+    * materialized. `init` is never released: it may be memo-owned
+    * (`nodesOf`) or still read by every round (seeds). `inputs` are
+    * the loop's private checkpoints (an edge frame the rounds probe,
+    * a seed frame), released after the last round — unless no round
+    * ran, when the result is `init` and may still read them. The
+    * result is the last round's checkpoint. */
+  private[graft] def iterate(init: DataFrame, rounds: Int,
+      inputs: DataFrame*)(step: DataFrame => DataFrame): DataFrame = {
+    val out = (1 to rounds).foldLeft(init) { (prev, _) =>
+      val next = step(prev).localCheckpoint(true)
+      if (prev ne init) releaseRound(prev)
+      next
+    }
+    if (rounds > 0) inputs.foreach(releaseRound)
+    out
+  }
 
   /** Default max(6 GiB, heap/4): the floor is ~1/4 of the 24 GiB
     * organic-board heap — big enough that the sf0.1 gate board

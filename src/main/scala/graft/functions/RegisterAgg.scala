@@ -90,82 +90,12 @@ case class RegisterMax(
     copy(regs = newChildren(0))
 }
 
-/** Element-wise SUM over fixed-width long-array registers as a
-  * PARTIAL aggregate — the multi-source message merge (packed
-  * Brandes σ/δ accumulation): each map task folds every incoming
-  * k-long message array into ONE buffer per node before the shuffle,
-  * so a round ships n·k longs instead of k rows per edge. Same
-  * per-index sum semantics bit for bit — only the carrier shape
-  * changes (the RegisterMax / kmeansIterate de-explosion lesson).
-  *
-  * Null input arrays are skipped; an empty group evaluates to the
-  * all-zero bank ("no messages").
-  */
-case class RegisterSumLong(
-    regs: Expression,
-    m: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[Array[Long]] {
-
-  override def children: Seq[Expression] = Seq(regs)
-  override def nullable: Boolean = false
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def createAggregationBuffer(): Array[Long] = new Array[Long](m)
-
-  override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
-    val a = regs.eval(input)
-    if (a == null) buf
-    else {
-      val arr = a.asInstanceOf[ArrayData]
-      val n = math.min(m, arr.numElements())
-      var i = 0
-      while (i < n) { buf(i) += arr.getLong(i); i += 1 }
-      buf
-    }
-  }
-
-  override def merge(buf: Array[Long], other: Array[Long]): Array[Long] = {
-    var i = 0
-    while (i < m) { buf(i) += other(i); i += 1 }
-    buf
-  }
-
-  override def eval(buf: Array[Long]): Any =
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-      .fromPrimitiveArray(buf)
-
-  override def serialize(buf: Array[Long]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(8 * m)
-    var i = 0
-    while (i < m) { bb.putLong(buf(i)); i += 1 }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val bb = ByteBuffer.wrap(bytes)
-    val buf = new Array[Long](m)
-    var i = 0
-    while (i < m) { buf(i) = bb.getLong; i += 1 }
-    buf
-  }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): RegisterSumLong =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): RegisterSumLong =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression =
-    copy(regs = newChildren(0))
-}
-
 /** Brandes forward message-sum, fused: for every input row (an
   * active-node ⋈ out-edge join row carrying the SOURCE node's packed
   * dist/σ arrays), adds σ[i] into the buffer at every index i whose
   * dist[i] equals the current level `t`. Semantically identical to
-  * `zip_with(dist, sigma, (d, g) -> IF(d = t, g, 0))` fed into
-  * [[RegisterSumLong]] — but the higher-order-function form is
+  * `zip_with(dist, sigma, (d, g) -> IF(d = t, g, 0))` summed element
+  * by element — but the higher-order-function form is
   * interpreted (a boxed intermediate array per edge row per round);
   * the fused update is one primitive loop over ArrayData, which cut
   * the forward rounds ~2× at sf0.1.
@@ -243,8 +173,8 @@ case class LevelSigmaSum(
   * DAG edge of the current level (dv[i] = t ∧ dw[i] = t+1). All
   * operands are non-negative longs, so Java `/` IS the floor
   * division the ppm contract specifies. Fuses the interpreted
-  * per-edge `transform` + [[RegisterSumLong]] pair into one
-  * primitive loop (same arithmetic bit for bit).
+  * per-edge `transform` + element-wise array sum into one primitive
+  * loop (same arithmetic bit for bit).
   */
 case class BrandesDeltaSum(
     dv: Expression, gv: Expression,
@@ -322,11 +252,6 @@ object RegisterAgg {
   def registerMax(regs: Column, m: Int): Column =
     ColumnBridge.column(
       RegisterMax(ColumnBridge.expression(regs), m).toAggregateExpression())
-
-  /** Column API: element-wise sum of `m`-long register arrays. */
-  def registerSumLong(regs: Column, m: Int): Column =
-    ColumnBridge.column(
-      RegisterSumLong(ColumnBridge.expression(regs), m).toAggregateExpression())
 
   /** Column API: fused forward σ message sum at level `t`. */
   def levelSigmaSum(dist: Column, sigma: Column, t: Int, m: Int): Column =

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.FrameMemo
+import graft.functions.KeyedFrameMemo.{iterate, releaseRound}
 
 /** Whole-graph analytics beyond the reference's query surface
   * (BinaryX-Graph delegates storage to Neo4j and ships no graph
@@ -13,45 +14,13 @@ import graft.functions.FrameMemo
   */
 object Ranking {
 
-  /** Phase tracing for the iterative operators, enabled by
-    * GRAFT_TRACE=1 — prints wall time of each eagerly-materialized
-    * stage so plan iteration has per-phase numbers, not just totals. */
-  private val traceOn = sys.env.get("GRAFT_TRACE").contains("1")
-  private def traced[T](label: String)(body: => T): T = {
-    if (!traceOn) body
-    else {
-      val t0 = System.nanoTime()
-      val r = body
-      println(f"[trace] $label: ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      r
-    }
-  }
-
-  /** Eagerly release a SUPERSEDED round frame's localCheckpoint
-    * blocks: a checkpointed frame's
-    * storage lives behind its LogicalRDD leaf, invisible to the
-    * CacheManager, and otherwise lingers until the ContextCleaner
-    * happens to GC the reference — across a 190-query bench session
-    * that lingering storage is the observed multi-second GC-spike
-    * source. ONLY call on frames whose every consumer has already
-    * been eagerly materialized (the next round's checkpoint): the
-    * blocks are the frame's only substance, so a late consumer would
-    * have nothing to recompute from. */
-  private[graph] def releaseRound(df: DataFrame): Unit =
-    try if (!df.sparkSession.sparkContext.isStopped)
-      df.queryExecution.analyzed.collectFirst {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          lr.rdd.unpersist(false)
-      }
-    catch { case _: Exception => () }
-
   /** Identity-keyed node-set memo over the INPUT edge frame for the
     * score-propagation family: engine callers pass the per-(session,
     * dir) cached callEdges OBJECT, so pagerank / weighted pagerank /
     * ppr / katz / hits / salsa / eigen share ONE distinct-union node
     * materialization per board instead of re-deriving (scan +
     * shuffle + checkpoint) it each. Ownership moves to the memo:
-    * operators must NOT releaseRound a shared frame — the memo's LRU,
+    * operators must NOT release a shared frame — the memo's LRU,
     * or KeyedFrameMemo.release, releases it. */
   private val nodesMemo = new FrameMemo
   private[graph] def nodesOf(edges: DataFrame): DataFrame =
@@ -86,28 +55,43 @@ object Ranking {
     * checkpointed per round so iteration t never re-derives t−1.
     */
   def pageRank(edges: DataFrame, iters: Int = 3): DataFrame = {
-    val e = edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
     val nodes = nodesOf(edges)
-    val e2 = e.join(
-        e.groupBy(col("src").as("u")).agg(count(lit(1)).as("outdeg")),
+    val e2 = outEdges(edgePairs(edges), count(lit(1)))
+    iterate(nodes.withColumn("score", lit(1000000L)), iters, e2)(
+      flowRound(nodes, e2, "score div out_total", Damped))
+      .select(col("node"), col("score").as("pagerank_ppm"))
+  }
+
+  /** The damped PageRank update over the in-flow sum c: the teleport
+    * 150000 ppm plus ⌊17·c / 20⌋. */
+  private val Damped = lit(150000L) + expr("(17 * coalesce(c, 0L)) div 20")
+
+  /** (src, dst) as longs. */
+  private def edgePairs(edges: DataFrame): DataFrame =
+    edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
+
+  /** `e` with each edge carrying `out`, aggregated over its source's
+    * out-edges (the out-degree or out-weight) as `out_total`,
+    * checkpointed. */
+  private def outEdges(e: DataFrame, out: Column): DataFrame =
+    e.join(e.groupBy(col("src").as("u")).agg(out.as("out_total")),
         col("src") === col("u"))
-      .select(col("src"), col("dst"), col("outdeg"))
+      .drop("u")
       .localCheckpoint(true)
-    var pr = nodes.withColumn("pr", lit(1000000L))
-    var prBack: DataFrame = null
-    for (_ <- 1 to iters) {
-      val contrib = pr.join(e2, pr("node") === e2("src"))
-        .groupBy(col("dst").as("node2"))
-        .agg(sum(expr("pr div outdeg")).as("c"))
-      pr = nodes.join(contrib, col("node") === col("node2"), "left")
-        .select(col("node"),
-          (lit(150000L) + expr("(17 * coalesce(c, 0L)) div 20")).as("pr"))
-        .localCheckpoint(true)
-      if (prBack != null) releaseRound(prBack)
-      prBack = pr
-    }
-    releaseRound(e2) // nodes is memo-owned (nodesOf) — never released here
-    pr.select(col("node"), col("pr").as("pagerank_ppm"))
+
+  /** One integer flow round of the PageRank family: c(v) sums `term`
+    * over v's in-edges from nodes with a positive score (a zero score
+    * sends nothing in every term), and each node of `nodes` takes
+    * `update` of c (null when nothing flowed in) as its next score,
+    * keeping the columns of `nodes`. */
+  private def flowRound(nodes: DataFrame, e: DataFrame, term: String,
+      update: Column)(s: DataFrame): DataFrame = {
+    val live = s.filter(col("score") > 0)
+    val contrib = live.join(e, live("node") === e("src"))
+      .groupBy(col("dst").as("node2"))
+      .agg(sum(expr(term)).as("c"))
+    nodes.join(contrib, col("node") === col("node2"), "left")
+      .select(nodes.columns.toSeq.map(col) :+ update.as("score"): _*)
   }
 
   /** Katz centrality (Katz 1953) in the C7 fixed-point contract:
@@ -126,23 +110,11 @@ object Ranking {
     * checkpointed.
     */
   def katz(edges: DataFrame, iters: Int = 3): DataFrame = {
-    val e = edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst"))
     val nodes = nodesOf(edges)
-    var k = nodes.withColumn("k", lit(1000000L))
-    var kBack: DataFrame = null
-    for (_ <- 1 to iters) {
-      val contrib = k.join(e, k("node") === e("src"))
-        .groupBy(col("dst").as("node2"))
-        .agg(sum(expr("k div 8")).as("c"))
-      k = nodes.join(contrib, col("node") === col("node2"), "left")
-        .select(col("node"),
-          (lit(1000000L) + coalesce(col("c"), lit(0L))).as("k"))
-        .localCheckpoint(true)
-      if (kBack != null) releaseRound(kBack)
-      kBack = k
-    }
-    k.select(col("node"), col("k").as("katz_ppm"))
+    iterate(nodes.withColumn("score", lit(1000000L)), iters)(
+      flowRound(nodes, edgePairs(edges), "score div 8",
+        lit(1000000L) + coalesce(col("c"), lit(0L))))
+      .select(col("node"), col("score").as("katz_ppm"))
   }
 
   /** Frequency-WEIGHTED PageRank: mass flows along an edge in
@@ -167,30 +139,15 @@ object Ranking {
     * checkpointed.
     */
   def pageRankWeighted(edges: DataFrame, iters: Int = 3): DataFrame = {
-    val e = edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst"), col("weight").cast("long").as("w"))
     val nodes = nodesOf(edges)
-    val e2 = e.join(
-        e.groupBy(col("src").as("u")).agg(sum(col("w")).as("wout")),
-        col("src") === col("u"))
-      .select(col("src"), col("dst"), col("w"), col("wout"))
-      .localCheckpoint(true)
-    var pr = nodes.withColumn("pr", lit(1000000L))
-    var prBack: DataFrame = null
-    for (_ <- 1 to iters) {
-      val contrib = pr.join(e2, pr("node") === e2("src"))
-        .groupBy(col("dst").as("node2"))
-        .agg(sum(expr(
-          "(pr div wout) * w + ((pr % wout) * w) div wout")).as("c"))
-      pr = nodes.join(contrib, col("node") === col("node2"), "left")
-        .select(col("node"),
-          (lit(150000L) + expr("(17 * coalesce(c, 0L)) div 20")).as("pr"))
-        .localCheckpoint(true)
-      if (prBack != null) releaseRound(prBack)
-      prBack = pr
-    }
-    releaseRound(e2) // nodes is memo-owned (nodesOf)
-    pr.select(col("node"), col("pr").as("wpagerank_ppm"))
+    val e2 = outEdges(edges.select(col("src").cast("long").as("src"),
+      col("dst").cast("long").as("dst"), col("weight").cast("long").as("w")),
+      sum(col("w")))
+    iterate(nodes.withColumn("score", lit(1000000L)), iters, e2)(
+      flowRound(nodes, e2,
+        "(score div out_total) * w + ((score % out_total) * w) div out_total",
+        Damped))
+      .select(col("node"), col("score").as("wpagerank_ppm"))
   }
 
   /** PERSONALIZED PageRank: rank relative to a seed set — "which
@@ -206,37 +163,20 @@ object Ranking {
     */
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
       iters: Int = 3): DataFrame = {
-    val e = edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
     val s = seeds.select(col("node").cast("long").as("node")).distinct()
       .withColumn("is_seed", lit(1L))
-      .localCheckpoint(true)
     // ride the shared node memo; the seed-flagged frame stays private
     // (and privately released) — only the raw node set is shared
     val nodes = nodesOf(edges)
       .join(s, Seq("node"), "left")
       .select(col("node"), coalesce(col("is_seed"), lit(0L)).as("is_seed"))
       .localCheckpoint(true)
-    val e2 = e.join(
-        e.groupBy(col("src").as("u")).agg(count(lit(1)).as("outdeg")),
-        col("src") === col("u"))
-      .select(col("src"), col("dst"), col("outdeg"))
-      .localCheckpoint(true)
-    var pr = nodes.withColumn("pr", col("is_seed") * lit(1000000L))
-    var prBack: DataFrame = null
-    for (_ <- 1 to iters) {
-      val contrib = pr.filter(col("pr") > 0)
-        .join(e2, pr("node") === e2("src"))
-        .groupBy(col("dst").as("node2"))
-        .agg(sum(expr("pr div outdeg")).as("c"))
-      pr = nodes.join(contrib, col("node") === col("node2"), "left")
-        .select(col("node"), col("is_seed"),
-          (col("is_seed") * lit(150000L) + expr("(17 * coalesce(c, 0L)) div 20")).as("pr"))
-        .localCheckpoint(true)
-      if (prBack != null) releaseRound(prBack)
-      prBack = pr
-    }
-    releaseRound(nodes); releaseRound(e2); releaseRound(s)
-    pr.filter(col("pr") > 0).select(col("node"), col("pr").as("ppr_ppm"))
+    val e2 = outEdges(edgePairs(edges), count(lit(1)))
+    iterate(nodes.withColumn("score", col("is_seed") * lit(1000000L)), iters,
+        nodes, e2)(
+      flowRound(nodes, e2, "score div out_total",
+        col("is_seed") * lit(150000L) + expr("(17 * coalesce(c, 0L)) div 20")))
+      .filter(col("score") > 0).select(col("node"), col("score").as("ppr_ppm"))
   }
 
   /** BATCH personalized PageRank — [[personalizedPageRank]] vectorized
@@ -252,34 +192,21 @@ object Ranking {
     * Returns (seed, node, ppr_ppm) restricted to the cones. */
   def personalizedPageRankBatch(edges: DataFrame, seeds: DataFrame,
       iters: Int = 3): DataFrame = {
-    val e = edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst"))
-    val e2 = e.join(
-        e.groupBy(col("src").as("u")).agg(count(lit(1)).as("outdeg")),
-        col("src") === col("u"))
-      .select(col("src"), col("dst"), col("outdeg"))
-      .localCheckpoint(true)
+    val e2 = outEdges(edgePairs(edges), count(lit(1)))
     val tele = seeds.select(col("seed").cast("long").as("seed")).distinct()
       .select(col("seed"), col("seed").as("node"))
       .localCheckpoint(true)
-    var pr = tele.withColumn("pr", lit(1000000L))
-    var back: DataFrame = null
-    for (_ <- 1 to iters) {
+    iterate(tele.withColumn("pr", lit(1000000L)), iters, e2, tele) { pr =>
       val contrib = pr.join(e2, pr("node") === e2("src"))
         .groupBy(col("seed"), col("dst").as("node2"))
-        .agg(sum(expr("pr div outdeg")).as("c"))
+        .agg(sum(expr("pr div out_total")).as("c"))
         .select(col("seed"), col("node2").as("node"),
           expr("(17 * c) div 20").as("v"))
-      pr = tele.withColumn("v", lit(150000L))
+      tele.withColumn("v", lit(150000L))
         .unionByName(contrib)
         .groupBy("seed", "node").agg(sum(col("v")).as("pr"))
         .filter(col("pr") > 0)
-        .localCheckpoint(true)
-      if (back != null) releaseRound(back)
-      back = pr
-    }
-    releaseRound(e2); releaseRound(tele)
-    pr.select(col("seed"), col("node"), col("pr").as("ppr_ppm"))
+    }.select(col("seed"), col("node"), col("pr").as("ppr_ppm"))
   }
 
   /** C9 k-core decomposition, bounded peeling: `rounds` iterations of
@@ -512,13 +439,6 @@ object Ranking {
     withAdj(u, adj, n)
   }
 
-  /** Granovetter weak-tie profile: per node, how many of its edges are
-    * LOCAL BRIDGES (zero common neighbors — ties whose removal
-    * lengthens every path between communities) vs embedded ties. One
-    * [[edgeSupports]] pass + one symmetric endpoint aggregation; the
-    * ratio is exact integer ppm. The information-flow complement to
-    * [[clusteringCoefficient]]: high weak-tie nodes are the brokers.
-    */
   /** Materialized triangle-support index over the normalized
     * undirected edge set — one (a, b, support) row per edge. The
     * shared wave-0 input of [[kTrussBounded]] and [[weakTies]]: an
@@ -528,6 +448,13 @@ object Ranking {
   def edgeSupportIndex(edges: DataFrame): DataFrame =
     edgeSupports(undirected(edges))
 
+  /** Granovetter weak-tie profile: per node, how many of its edges are
+    * LOCAL BRIDGES (zero common neighbors — ties whose removal
+    * lengthens every path between communities) vs embedded ties. One
+    * [[edgeSupports]] pass + one symmetric endpoint aggregation; the
+    * ratio is exact integer ppm. The information-flow complement to
+    * [[clusteringCoefficient]]: high weak-tie nodes are the brokers.
+    */
   def weakTies(edges: DataFrame): DataFrame =
     weakTiesFromSupports(edgeSupportIndex(edges).localCheckpoint(true))
 
@@ -735,7 +662,7 @@ object Ranking {
     if (allSrcIds.isEmpty)
       return spark.emptyDataset[(Long, Long)]
         .toDF("node", "betweenness_ppm")
-    val eAll = traced("bw:edges")(Traversal.srcPreparedDistinct(edges))
+    val eAll = Traversal.srcPreparedDistinct(edges)
     // SOURCE-CHUNK DISPATCH on the sweep's materialized-cell count:
     // the packed form's per-chunk peak is the checkpointed DAG-edge
     // frame `esC` — |E| × k cells at ~23 B/cell measured (sf1:
@@ -781,7 +708,8 @@ object Ranking {
     // lesson applied to Brandes): the per-(source, node) row state
     // becomes THREE k-wide arrays per node — dist[i], σ[i], δ[i] for
     // source index i — so every sweep round ships ONE row per edge
-    // (k longs wide, element-wise-summed map-side by RegisterSumLong)
+    // (k longs wide, summed element-wise map-side by the fused
+    // LevelSigmaSum / BrandesDeltaSum aggregates)
     // instead of up to k rows per edge. The per-index arithmetic is
     // the row form verbatim (σ sums over same-level in-edges;
     // δ[i] = Σ_w ⌊σ_v·(10⁶+δ_w)/σ_w⌋ over DAG successors), so the
@@ -829,7 +757,7 @@ object Ranking {
             .forwardDist(col("dist"), col("m"), t, k).as("dist"),
           graft.functions.BrandesOps
             .forwardSigma(col("dist"), col("sigma"), col("m"), k).as("sigma"))
-      state = traced(s"bw:fwd$t")(state.localCheckpoint(true))
+      state = state.localCheckpoint(true)
       // round t−1's blocks have no remaining consumer once round t
       // is materialized (t=1's prev is the LocalRelation seed — no-op)
       releaseRound(prevState)
@@ -851,7 +779,7 @@ object Ranking {
       .filter(graft.functions.BrandesOps.dagEdge(col("dv"), col("dw")))
     // the second build join exchanges on _dst already — the per-round
     // δ probes below reuse that partitioning, no explicit repartition
-    val esC = traced("bw:es")(es.localCheckpoint(true))
+    val esC = es.localCheckpoint(true)
     // all-zero δ₀ is a trivial projection of the checkpointed state —
     // not worth its own barrier/materialization
     var delta = state
@@ -872,7 +800,7 @@ object Ranking {
         .select(col("v"), col("dist"),
           graft.functions.BrandesOps
             .deltaUpdate(col("dist"), col("delta"), col("c"), t, k).as("delta"))
-      delta = traced(s"bw:bwd$t")(delta.localCheckpoint(true))
+      delta = delta.localCheckpoint(true)
       if (firstBwd) {
         // δ₀ was a lazy projection of `state`; with it and esC both
         // materialized, the forward fixpoint's final frame is done
@@ -1074,31 +1002,37 @@ object Ranking {
   def hits(edges: DataFrame, iters: Int = 2): DataFrame = {
     val e = simpleEdgesOf(edges)
     val nodes = nodesOf(edges)
-    var s = nodes.select(col("node"), lit(1000000L).as("hub"),
+    val start = nodes.select(col("node"), lit(1000000L).as("hub"),
       lit(1000000L).as("auth"))
-    for (_ <- 1 to iters) {
+    // a round keeps its raw sums and the next round scales them, so
+    // the start (already at max 10⁶) costs no max job
+    val raw = iterate(start, iters) { r =>
+      val s = if (r eq start) start else scaleToPpm(r, "hub", "auth")
       val a1 = e.join(s.select(col("node"), col("hub")), col("src") === col("node"))
         .groupBy(col("dst").as("an")).agg(sum(col("hub")).as("av"))
       val h1 = e.join(s.select(col("node"), col("auth")), col("dst") === col("node"))
         .groupBy(col("src").as("hn")).agg(sum(col("auth")).as("hv"))
-      val joined = nodes
+      nodes
         .join(h1, col("node") === col("hn"), "left")
         .join(a1, col("node") === col("an"), "left")
-        .select(col("node"), coalesce(col("hv"), lit(0L)).as("hv"),
-          coalesce(col("av"), lit(0L)).as("av"))
-        .localCheckpoint(true)
-      val mx = joined.agg(greatest(max(col("hv")), lit(1L)).as("mh"),
-        greatest(max(col("av")), lit(1L)).as("ma"))
-      s = joined.crossJoin(broadcast(mx))
-        // widen through DECIMAL(38,0): hv ≤ indeg·10⁶, so the long
-        // product 10⁶·hv would silently wrap past indeg ≈ 9.2M —
-        // exactly the wrap-vs-throw cross-engine divergence the
-        // sketches module documents; the oracle widens to HUGEINT
-        .select(col("node"),
-          expr("CAST((CAST(1000000 AS DECIMAL(38,0)) * hv) div mh AS BIGINT)").as("hub"),
-          expr("CAST((CAST(1000000 AS DECIMAL(38,0)) * av) div ma AS BIGINT)").as("auth"))
+        .select(col("node"), coalesce(col("hv"), lit(0L)).as("hub"),
+          coalesce(col("av"), lit(0L)).as("auth"))
     }
-    s.select(col("node"), col("hub").as("hub_ppm"), col("auth").as("auth_ppm"))
+    scaleToPpm(raw, "hub", "auth")
+      .select(col("node"), col("hub").as("hub_ppm"), col("auth").as("auth_ppm"))
+  }
+
+  /** (node, cols…) with each of `cols` scaled to max = 10⁶ by floor
+    * division (a max below 1 divides by 1), from one broadcast 1-row
+    * max. Widened through DECIMAL(38,0): a score ≤ indeg·10⁶, so the
+    * long product 10⁶·x would silently wrap past indeg ≈ 9.2M —
+    * exactly the wrap-vs-throw cross-engine divergence the sketches
+    * module documents; the oracle widens to HUGEINT. */
+  private def scaleToPpm(s: DataFrame, cols: String*): DataFrame = {
+    val maxes = cols.map(c => greatest(max(col(c)), lit(1L)).as(s"max_$c"))
+    s.crossJoin(broadcast(s.agg(maxes.head, maxes.tail: _*)))
+      .select(col("node") +: cols.map(c => expr(
+        s"CAST((CAST(1000000 AS DECIMAL(38,0)) * $c) div max_$c AS BIGINT)").as(c)): _*)
   }
 
   /** Eigenvector centrality — SHIFTED power iteration on the in-edge
@@ -1117,25 +1051,16 @@ object Ranking {
     * shape as one pagerank round, linear in edges at any scale. */
   def eigenCentrality(edges: DataFrame, iters: Int = 3): DataFrame = {
     val e = simpleEdgesOf(edges)
-    val nodes = nodesOf(edges)
-    var s = nodes.select(col("node"), lit(1000000L).as("x"))
-    for (_ <- 1 to iters) {
+    val start = nodesOf(edges).select(col("node"), lit(1000000L).as("x"))
+    // raw sums per round, scaled by the next one (as in [[hits]])
+    val raw = iterate(start, iters) { r =>
+      val s = if (r eq start) start else scaleToPpm(r, "x")
       val v1 = e.join(s.select(col("node"), col("x")), col("src") === col("node"))
         .groupBy(col("dst").as("vn")).agg(sum(col("x")).as("v"))
-      val joined = s
-        .join(v1, col("node") === col("vn"), "left")
-        .select(col("node"),
-          (col("x") + coalesce(col("v"), lit(0L))).as("v"))
-        .localCheckpoint(true)
-      val mx = joined.agg(greatest(max(col("v")), lit(1L)).as("mv"))
-      // DECIMAL(38,0) widening: v ≤ indeg·10⁶ can top 2^63/10⁶ on a
-      // hub — the oracle mirrors through HUGEINT
-      s = joined.crossJoin(broadcast(mx))
-        .select(col("node"),
-          expr("CAST((CAST(1000000 AS DECIMAL(38,0)) * v) div mv AS BIGINT)")
-            .as("x"))
+      s.join(v1, col("node") === col("vn"), "left")
+        .select(col("node"), (col("x") + coalesce(col("v"), lit(0L))).as("x"))
     }
-    s.select(col("node"), col("x").as("eigen_ppm"))
+    scaleToPpm(raw, "x").select(col("node"), col("x").as("eigen_ppm"))
   }
 
   /** SALSA hubs/authorities (Lempel & Moran 2000) — [[hits]]'s
@@ -1158,28 +1083,21 @@ object Ranking {
       .select(col("src"), col("dst"), col("outdeg"), col("indeg"))
       .localCheckpoint(true)
     val nodes = nodesOf(edges)
-    var s = nodes.select(col("node"), lit(1000000L).as("hub"),
+    val start = nodes.select(col("node"), lit(1000000L).as("hub"),
       lit(1000000L).as("auth"))
-    for (_ <- 1 to iters) {
+    val s = iterate(start, iters, ew) { s =>
       val a1 = ew.join(s.select(col("node"), col("hub")), col("src") === col("node"))
         .groupBy(col("dst").as("an")).agg(sum(expr("hub div outdeg")).as("av"))
       val h1 = ew.join(a1, col("dst") === col("an"))
         .groupBy(col("src").as("hn")).agg(sum(expr("av div indeg")).as("hv"))
-      s = nodes
+      nodes
         .join(h1, col("node") === col("hn"), "left")
         .join(a1, col("node") === col("an"), "left")
         .select(col("node"), coalesce(col("hv"), lit(0L)).as("hub"),
           coalesce(col("av"), lit(0L)).as("auth"))
-        .localCheckpoint(true)
     }
-    val mx = s.agg(greatest(max(col("hub")), lit(1L)).as("mh"),
-      greatest(max(col("auth")), lit(1L)).as("ma"))
-    s.crossJoin(broadcast(mx))
-      .select(col("node"),
-        expr("CAST((CAST(1000000 AS DECIMAL(38,0)) * hub) div mh AS BIGINT)")
-          .as("hub_ppm"),
-        expr("CAST((CAST(1000000 AS DECIMAL(38,0)) * auth) div ma AS BIGINT)")
-          .as("auth_ppm"))
+    scaleToPpm(s, "hub", "auth")
+      .select(col("node"), col("hub").as("hub_ppm"), col("auth").as("auth_ppm"))
   }
 
   /** Square (4-cycle) census over the hub-capped undirected graph —

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.FrameMemo
+import graft.functions.KeyedFrameMemo.releaseRound
 
 /** Distributed graph traversal over edge DataFrames.
   *
@@ -363,8 +364,8 @@ object Traversal {
           startSet.filter(pmod(hash(col("start")), lit(nChunks)) === i),
           maxDepth, c2P, release = true)
       }
-      Ranking.releaseRound(eP)
-      Ranking.releaseRound(c2P)
+      releaseRound(eP)
+      releaseRound(c2P)
       directSelfLoops(edges).unionByName(parts.reduce(_ unionByName _))
     }
   }
@@ -387,7 +388,7 @@ object Traversal {
         .groupBy(col("start"), col("_dst").as("cur"))
         .agg(sum(col("walks")).as("walks"))
         .localCheckpoint(true)
-      if (release && d > 1) Ranking.releaseRound(prev)
+      if (release && d > 1) releaseRound(prev)
       val returning = dp.filter(col("cur") === col("start") && lit(d) >= 2)
         .select(col("start"), col("walks"))
       val corrected =
@@ -401,7 +402,7 @@ object Traversal {
         col("walks").as("n_cycles"))
       if (release) out.localCheckpoint(true) else out
     }
-    if (release) Ranking.releaseRound(dp)
+    if (release) releaseRound(dp)
     cycles.reduce(_ unionByName _)
       .withColumn("call_type", lit("Indirect"))
       .select("node", "call_type", "depth", "n_cycles")
@@ -577,7 +578,7 @@ object Traversal {
     // released here rather than leaking one seed frame per call (r14
     // advice: the chunked reachCounts path stacked up to 4096 of
     // them per session).
-    Ranking.releaseRound(seed)
+    releaseRound(seed)
     reached.toSeq
   }
 
@@ -598,7 +599,7 @@ object Traversal {
       .reduce(_ unionByName _)
       .groupBy("start").agg(sum(col("n_reach")).as("n_reach"))
       .localCheckpoint(true)
-    rounds.foreach(Ranking.releaseRound)
+    rounds.foreach(releaseRound)
     counts
   }
 
@@ -781,9 +782,9 @@ object Traversal {
         .agg(graft.functions.RegisterAgg.registerMax(col("regs"), m).as("regs"))
         .localCheckpoint(true)
       // superseded register bank — every consumer materialized above
-      Ranking.releaseRound(prevRegs)
+      releaseRound(prevRegs)
     }
-    Ranking.releaseRound(e)
+    releaseRound(e)
     // harmonic-mean HLL estimate per node; untouched registers are 0
     // and contribute 2⁻⁰ = 1 to Z, so one fold covers both branches.
     val alpha = if (m >= 128) 0.7213 / (1 + 1.079 / m)

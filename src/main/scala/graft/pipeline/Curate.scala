@@ -39,10 +39,6 @@ object Curate {
       .orderBy("doc_id")
   }
 
-  /** The curated corpus itself (what downstream training reads). */
-  def curatedDocs(docs: DataFrame): DataFrame =
-    docs.join(curate(docs).filter(col("kept")).select("doc_id"), "doc_id")
-
   /** D23 FULL curation: [[curate]]'s quality/exact-dedup/language
     * gates composed with the round-4 operators — NEAR-DUP CLUSTER
     * canonical selection ([[Dedup.clusters]]: only the min-id member

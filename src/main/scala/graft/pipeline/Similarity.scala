@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.{TopKAgg, VectorOps}
+import graft.functions.KeyedFrameMemo.iterate
 
 /** Similarity search over an embedding column (SURVEY.md §2 D5–D7).
   *
@@ -449,11 +450,6 @@ object Similarity {
   def planeWeightSql(j: Int, i: String): String =
     s"((((($j * 64 + $i) * ($j * 64 + $i)) % 10007) * 2654435761) % 97 - 48)"
 
-  private def planeWeight(j: Int, i: Column): Column = {
-    val v = (lit(j) * 64 + i + 1).cast("long")
-    ((v * v) % 10007) * lit(2654435761L) % 97 - 48
-  }
-
   /** FIXED-POINT copy of a double-array column: round(x·10⁶) as long.
     * The single multiply is exact deterministic IEEE on both engines
     * (same parquet bits in, same double out), and everything after it
@@ -590,7 +586,7 @@ object Similarity {
 
   /** [[kmeansCentroids]] over an already-materialized norm frame —
     * callers that also assign/rerank share ONE checkpoint. */
-  private[pipeline] def kmeansCentroidsFromNorm(v: DataFrame, k: Int,
+  private[graft] def kmeansCentroidsFromNorm(v: DataFrame, k: Int,
       iters: Int): DataFrame = {
     // the element-wise recompute needs the width statically; read it
     // from the data (one 1-row job) rather than assuming 64 — a wrong
@@ -600,11 +596,9 @@ object Similarity {
     if (first.isEmpty)
       return v.limit(0).select(col("vec_id").as("cid"), col("qv").as("cv"))
     val dim = first.head.getInt(0)
-    var cents = v.filter(col("vec_id") < k)
-      .select(col("vec_id").as("cid"), col("qv").as("cv"))
-    for (_ <- 1 to iters)
-      cents = kmeansIterate(v, cents, dim).localCheckpoint(true)
-    cents
+    iterate(v.filter(col("vec_id") < k)
+      .select(col("vec_id").as("cid"), col("qv").as("cv")), iters)(
+      kmeansIterate(v, _, dim))
   }
 
   /** Corpus topic-clustering summary: train the integer k-means

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.KeyedFrameMemo.iterate
 import graft.streaming.EventStreams
 
 /** Temporal operators beyond the reference's surface: as-of join and
@@ -855,8 +856,12 @@ object TemporalOps {
     val types = events.select(col("event_type").as("type")).distinct()
       .localCheckpoint(true)
     val k = types.count()
-    var pi = types.withColumn("pi", lit(1000000L / math.max(k, 1L)))
-    for (_ <- 1 to rounds) {
+    // eager per-round materialization: the chain state is |types|
+    // rows, but left un-checkpointed Catalyst re-optimizes the whole
+    // 8-round join tree at the end (measured 12 s of pure planning
+    // at sf0.1 for 5 types)
+    iterate(types.withColumn("pi", lit(1000000L / math.max(k, 1L))), rounds,
+        c, cm, types) { pi =>
       val stepped = pi.join(cm, pi("type") === cm("from_type"))
         .groupBy(col("to_type").as("type2"))
         .agg(sum(expr("(pi * n) div row_total")).as("pin"))
@@ -870,15 +875,9 @@ object TemporalOps {
       // breaking the one-row-per-type contract)
       val merged = stepped.unionByName(dangling)
         .groupBy("type2").agg(sum(col("pin")).as("pin"))
-      // eager per-round materialization: the chain state is |types|
-      // rows, but left un-checkpointed Catalyst re-optimizes the whole
-      // 8-round join tree at the end (measured 12 s of pure planning
-      // at sf0.1 for 5 types)
-      pi = types.join(merged, col("type") === col("type2"), "left")
+      types.join(merged, col("type") === col("type2"), "left")
         .select(col("type"), coalesce(col("pin"), lit(0L)).as("pi"))
-        .localCheckpoint(true)
-    }
-    pi.select(col("type").as("event_type"), col("pi").as("pi_ppm"))
+    }.select(col("type").as("event_type"), col("pi").as("pi_ppm"))
       .orderBy("event_type")
   }
 

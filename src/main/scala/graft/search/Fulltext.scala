@@ -36,10 +36,6 @@ object Fulltext {
       .groupBy("doc_id", "token")
       .agg(count(lit(1)).as("tf"))
 
-  /** Document frequency per term: (token, df). */
-  def docFrequency(post: DataFrame): DataFrame =
-    post.groupBy("token").agg(count(lit(1)).as("df"))
-
   /** One-shot in-memory index over a document set. */
   def buildIndex(docs: DataFrame): FulltextIndex =
     FulltextIndex(postings(docs), docs.agg(count(lit(1)).as("n")))

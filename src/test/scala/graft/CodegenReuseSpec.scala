@@ -55,6 +55,18 @@ class CodegenReuseSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(second == first)
   }
 
+  test("MSF merge: a second call compiles no class") {
+    // a 600-node chain is longer than 2^8, so all 8 inner rounds run
+    val s = spark
+    import s.implicits._
+    val h = (0L until 599L).map(i => (i, i + 1)).toDF("x", "y")
+    val (first, _) = call(Components.distributedBoundedMerge(h, 8))
+    val (second, n) = call(Components.distributedBoundedMerge(h, 8))
+    assert(first.size == 600)
+    assert(n == 0, s"second distributedBoundedMerge compiled $n classes")
+    assert(second == first)
+  }
+
   test("board queries: second calls compile no class, past Spark's default cache size") {
     // together these three use ~170 classes, more than Spark's default
     // cache of 100 holds, so the second round also needs the session's
