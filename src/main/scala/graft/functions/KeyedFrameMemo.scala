@@ -3,7 +3,6 @@ package graft.functions
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** The one cross-call frame cache: every shared artifact the library
@@ -116,7 +115,12 @@ private[graft] object KeyedFrameMemo {
     * the LogicalRDD leaf); a frame composed over another frame's
     * checkpoint is left alone, since those blocks are not its own. */
   private def unpersistCheckpoint(df: DataFrame): Unit =
-    unpersistLeaf(df)(Some(_).collect { case lr: LogicalRDD => lr })
+    try if (!df.sparkSession.sparkContext.isStopped)
+      df.queryExecution.analyzed match {
+        case lr: LogicalRDD => lr.rdd.unpersist(false); ()
+        case _ => ()
+      }
+    catch { case _: Exception => () }
 
   /** Eagerly release a SUPERSEDED round frame's checkpoint blocks (the
     * first checkpoint leaf of its plan): a checkpointed frame's
@@ -130,12 +134,10 @@ private[graft] object KeyedFrameMemo {
     * have nothing to recompute from. Never on a memo's frame: the
     * memo's LRU, or [[release]], releases those. */
   private[graft] def releaseRound(df: DataFrame): Unit =
-    unpersistLeaf(df)(_.collectFirst { case lr: LogicalRDD => lr })
-
-  private def unpersistLeaf(df: DataFrame)(
-      leaf: LogicalPlan => Option[LogicalRDD]): Unit =
     try if (!df.sparkSession.sparkContext.isStopped)
-      leaf(df.queryExecution.analyzed).foreach(_.rdd.unpersist(false))
+      df.queryExecution.analyzed.collectFirst {
+        case lr: LogicalRDD => lr.rdd.unpersist(false)
+      }
     catch { case _: Exception => () }
 
   /** The fixed-round loop: `rounds` applications of `step` from
@@ -144,19 +146,27 @@ private[graft] object KeyedFrameMemo {
     * materialized. `init` is never released: it may be memo-owned
     * (`nodesOf`) or still read by every round (seeds). `inputs` are
     * the loop's private checkpoints (an edge frame the rounds probe,
-    * a seed frame), released after the last round — unless no round
-    * ran, when the result is `init` and may still read them. The
-    * result is the last round's checkpoint. */
+    * a seed frame), released once the rounds are done, except those
+    * the result still reads: when no round ran, the result is `init`,
+    * which may be built on one of them. Every frame released here is
+    * itself a checkpoint, so only its own blocks go. The result is
+    * the last round's checkpoint. */
   private[graft] def iterate(init: DataFrame, rounds: Int,
       inputs: DataFrame*)(step: DataFrame => DataFrame): DataFrame = {
     val out = (1 to rounds).foldLeft(init) { (prev, _) =>
       val next = step(prev).localCheckpoint(true)
-      if (prev ne init) releaseRound(prev)
+      if (prev ne init) unpersistCheckpoint(prev)
       next
     }
-    if (rounds > 0) inputs.foreach(releaseRound)
+    val read = rddIds(out)
+    inputs.filterNot(in => rddIds(in).subsetOf(read))
+      .foreach(unpersistCheckpoint)
     out
   }
+
+  /** Ids of the checkpointed RDDs `df`'s plan reads. */
+  private def rddIds(df: DataFrame): Set[Int] =
+    df.queryExecution.analyzed.collect { case lr: LogicalRDD => lr.rdd.id }.toSet
 
   /** Default max(6 GiB, heap/4): the floor is ~1/4 of the 24 GiB
     * organic-board heap — big enough that the sf0.1 gate board
@@ -184,9 +194,7 @@ private[graft] object KeyedFrameMemo {
   private[graft] def frameBytes(df: DataFrame): Long = try {
     if (df.sparkSession.sparkContext.isStopped) 0L
     else {
-      val ids = df.queryExecution.analyzed.collect {
-        case lr: LogicalRDD => lr.rdd.id
-      }.toSet
+      val ids = rddIds(df)
       if (ids.isEmpty) 0L
       else df.sparkSession.sparkContext.getRDDStorageInfo
         .filter(i => ids.contains(i.id)).map(i => i.memSize + i.diskSize)

@@ -826,19 +826,16 @@ object Components {
     // inner fixpoint — further rounds are no-ops (what the
     // oracle's fixed unroll replays)
     while (inner < innerRounds && !labStable) {
-      // every join's build side is fixed by a hint: both inputs are
-      // small, and AQE would otherwise broadcast whichever finished
-      // first, so a call could plan (and compile) a join anew
-      val viaNbr = hs.join(labD.select(col("c").as("y"), col("l").as("ln"))
-          .hint("shuffle_hash"), Seq("y"))
+      val viaNbr = hs.join(labD.select(col("c").as("y"), col("l").as("ln")),
+          Seq("y"))
         .groupBy(col("x").as("c")).agg(min(col("ln")).as("nm"))
       val viaJump = labD.as("p")
-        .join(labD.select(col("c").as("pl"), col("l").as("lj")).hint("shuffle_hash"),
+        .join(labD.select(col("c").as("pl"), col("l").as("lj")),
           col("p.l") === col("pl"))
         .select(col("p.c").as("c"), col("lj"))
       val wide = ckptFresh(labD
-        .join(viaNbr.hint("shuffle_hash"), Seq("c"), "left")
-        .join(viaJump.hint("shuffle_hash"), Seq("c"), "left")
+        .join(viaNbr, Seq("c"), "left")
+        .join(viaJump, Seq("c"), "left")
         .select(col("c"), col("l").as("prev"),
           least(col("l"), coalesce(col("nm"), col("l")),
             coalesce(col("lj"), col("l"))).as("l"))

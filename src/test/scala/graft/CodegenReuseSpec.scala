@@ -56,15 +56,25 @@ class CodegenReuseSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("MSF merge: a second call compiles no class") {
-    // a 600-node chain is longer than 2^8, so all 8 inner rounds run
+    // a 600-node chain is longer than 2^8, so all 8 inner rounds run.
+    // Broadcast is off here: every join input of a chain this short is
+    // small, and AQE broadcasts whichever side's stage finished first,
+    // so a warm call can plan a join differently from a cold one (2
+    // classes more). With the join strategy fixed, the merge's own
+    // plans compile each class once.
     val s = spark
     import s.implicits._
     val h = (0L until 599L).map(i => (i, i + 1)).toDF("x", "y")
-    val (first, _) = call(Components.distributedBoundedMerge(h, 8))
-    val (second, n) = call(Components.distributedBoundedMerge(h, 8))
-    assert(first.size == 600)
-    assert(n == 0, s"second distributedBoundedMerge compiled $n classes")
-    assert(second == first)
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    try {
+      val (first, _) = call(Components.distributedBoundedMerge(h, 8))
+      val (second, n) = call(Components.distributedBoundedMerge(h, 8))
+      assert(first.size == 600)
+      assert(n == 0, s"second distributedBoundedMerge compiled $n classes")
+      assert(second == first)
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   test("board queries: second calls compile no class, past Spark's default cache size") {

@@ -53,6 +53,29 @@ class RoundLifecycleSpec extends AnyFunSuite with PersistedRdds {
   }
 
   test("pageRank") { keepsOneRound(graph(), 1)(Ranking.pageRank(_, 4)) }
+  /** With no round the result is the start state: the one frame that
+    * state reads stays persisted, besides `memos` memo frames of the
+    * input, and the loop's other private input (the out-degree edge
+    * frame) goes at once. */
+  private def keepsStartState(memos: Int)(op: DataFrame => DataFrame): Unit = {
+    val input = graph()
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    var result = op(input)
+    assert(result.collect().nonEmpty)
+    val read = result.queryExecution.analyzed.collect { case lr: LogicalRDD => lr.rdd.id }.toSet
+    val left = persistedSince(before)
+    assert(read.size == 1 && read.subsetOf(left.keySet),
+      s"the result reads one persisted frame: $read of $left")
+    assert(left.size == 1 + memos, s"persisted: $left")
+    KeyedFrameMemo.release(input)
+    result = null
+    assertReleased(before)
+  }
+
+  test("pageRank, no round") { keepsStartState(0)(Ranking.pageRank(_, 0)) }
+  test("personalizedPageRank, no round") {
+    keepsStartState(1)(Ranking.personalizedPageRank(_, seeds("node"), 0))
+  }
   test("pageRankWeighted") { keepsOneRound(graph(), 1)(Ranking.pageRankWeighted(_, 4)) }
   test("personalizedPageRank") {
     keepsOneRound(graph(), 1)(Ranking.personalizedPageRank(_, seeds("node"), 4))
