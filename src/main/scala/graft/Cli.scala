@@ -105,12 +105,14 @@ object Cli {
     val limit = opt(args, "--limit").map(_.toInt).getOrElse(100)
     def engine = new GraphQueryEngine(GraphStore.load(spark, store))
     def emit(df: DataFrame): Unit = emitAs(df, format)
+    // counted on the saved store: the just-built graph's plans would
+    // re-run the whole import (JSON parse, function window, call joins)
+    def emitStoreStats(): Unit = emit(JsonImporter.stats(GraphStore.load(spark, store)))
 
     rest match {
       case Seq("import", "json", path, _*) =>
-        val g = JsonImporter.importAnalysis(spark, path)
-        GraphStore.save(g, store)
-        emit(JsonImporter.stats(g))
+        GraphStore.save(JsonImporter.importAnalysis(spark, path), store)
+        emitStoreStats()
       case Seq("import", "directory", dir, _*) =>
         val raw = JsonImporter.readAnalysis(spark, dir, opt(args, "--pattern"))
         val invalid = JsonImporter.validate(raw).filter("NOT valid")
@@ -120,9 +122,8 @@ object Cli {
           System.err.println("[warn] invalid inputs:")
           emit(invalid)
         }
-        val g = JsonImporter.buildGraph(raw)
-        GraphStore.save(g, store)
-        emit(JsonImporter.stats(g))
+        GraphStore.save(JsonImporter.buildGraph(raw), store)
+        emitStoreStats()
       case Seq("query", "functions", _*) =>
         emit(engine.queryFunctions(opt(args, "--pattern").getOrElse(""),
           opt(args, "--binary"), limit))

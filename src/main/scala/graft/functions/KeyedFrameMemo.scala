@@ -34,11 +34,16 @@ import org.apache.spark.sql.execution.LogicalRDD
   * lifetime IS the reachability of the consumer plan (MemoChurnSpec
   * pins 300 evictions + System.gc between handle fetch and execution).
   * The one eager path is [[KeyedFrameMemo.release]], for an owner that
-  * retires the key frame itself. */
-private[graft] class KeyedFrameMemo[K] {
+  * retires the key frame itself.
+  *
+  * A [[KeyedMemo]] is the same cache over a driver-side value (a
+  * collected adjacency), sized by `bytesOf`: it shares the registry,
+  * the byte ledger, the LRU and [[KeyedFrameMemo.release]], and holds
+  * no blocks, so dropping it frees heap only. */
+private[graft] class KeyedMemo[K, V](bytesOf: V => Long, free: V => Unit) {
   import KeyedFrameMemo._
   private[functions] val frames =
-    scala.collection.concurrent.TrieMap.empty[K, DataFrame]
+    scala.collection.concurrent.TrieMap.empty[K, V]
   private[functions] val stamps =
     scala.collection.concurrent.TrieMap.empty[K, Long]
   private[functions] val sizes =
@@ -49,17 +54,22 @@ private[graft] class KeyedFrameMemo[K] {
     stamps.remove(key.asInstanceOf[K])
     sizes.remove(key.asInstanceOf[K])
   }
+  /** Drop `key` and free its value now. */
+  private[functions] def evict(key: Any): Unit = {
+    frames.get(key.asInstanceOf[K]).foreach(free)
+    drop(key)
+  }
   /** Non-building lookup: lets a measured dispatch choose its plan
     * based on whether a sibling query ALREADY paid for the shared
     * frame, without forcing the build itself (the D4b prefix join
     * rides D4's pair frame only when it exists). Touches the LRU
     * stamp on hit so riding keeps the frame warm. */
-  def peek(key: K): Option[DataFrame] = {
+  def peek(key: K): Option[V] = {
     val f = frames.get(key)
     if (f.isDefined) stamps.put(key, globalTick.incrementAndGet())
     f
   }
-  def getOrBuild(key: K)(build: => DataFrame): DataFrame = {
+  def getOrBuild(key: K)(build: => V): V = {
     if (frames.contains(key)) MemoStats.recordHit()
     else MemoStats.recordBuild()
     var built = false
@@ -77,22 +87,27 @@ private[graft] class KeyedFrameMemo[K] {
       // measure AFTER build: the heavy builds end in an eager
       // localCheckpoint(true), so the blocks exist now; lazy (non-
       // checkpointed) frames measure 0 and ride the count backstop
-      sizes.put(key, frameBytes(out))
+      sizes.put(key, bytesOf(out))
       sweepOverBudget(this, key)
     }
     out
   }
 }
 
+/** A memo of checkpointed frames, sized by their persisted blocks. */
+private[graft] class KeyedFrameMemo[K]
+    extends KeyedMemo[K, DataFrame](KeyedFrameMemo.frameBytes,
+      KeyedFrameMemo.unpersistCheckpoint)
+
 /** The registry and global byte ledger over every [[KeyedFrameMemo]]
   * instance — residency is a property of the one block manager all
   * memos share, so the budget is global, not per-memo. */
 private[graft] object KeyedFrameMemo {
-  private val globalTick = new java.util.concurrent.atomic.AtomicLong()
+  private[functions] val globalTick = new java.util.concurrent.atomic.AtomicLong()
   private val registry =
-    new java.util.concurrent.CopyOnWriteArrayList[KeyedFrameMemo[_]]
-  private def register(m: KeyedFrameMemo[_]): Unit = { registry.add(m); () }
-  private def memos: Seq[KeyedFrameMemo[_]] = registry.asScala.toSeq
+    new java.util.concurrent.CopyOnWriteArrayList[KeyedMemo[_, _]]
+  private[functions] def register(m: KeyedMemo[_, _]): Unit = { registry.add(m); () }
+  private def memos: Seq[KeyedMemo[_, _]] = registry.asScala.toSeq
 
   /** Drop, from every memo, each entry keyed by `df` (the key itself
     * or one component of a tuple key), and unpersist the checkpoint
@@ -105,16 +120,13 @@ private[graft] object KeyedFrameMemo {
     m.frames.keys.filter {
       case p: Product => p.productIterator.contains(df)
       case k => k == df
-    }.foreach { k =>
-      m.frames.get(k).foreach(unpersistCheckpoint)
-      m.drop(k)
-    }
+    }.foreach(m.evict)
   }
 
   /** Unpersist the blocks of a frame that IS a checkpoint (its plan is
     * the LogicalRDD leaf); a frame composed over another frame's
     * checkpoint is left alone, since those blocks are not its own. */
-  private def unpersistCheckpoint(df: DataFrame): Unit =
+  private[functions] def unpersistCheckpoint(df: DataFrame): Unit =
     try if (!df.sparkSession.sparkContext.isStopped)
       df.queryExecution.analyzed match {
         case lr: LogicalRDD => lr.rdd.unpersist(false); ()
@@ -223,7 +235,7 @@ private[graft] object KeyedFrameMemo {
     * consumers). Best-effort under concurrency: a racing rebuild
     * costs wasted work, never correctness (reachability owns
     * lifetime). */
-  private def sweepOverBudget(owner: KeyedFrameMemo[_], key: Any): Unit = {
+  private[functions] def sweepOverBudget(owner: KeyedMemo[_, _], key: Any): Unit = {
     var total = residentBytes
     if (total <= budgetBytes) return
     val byAge = memos.flatMap { m =>
@@ -256,7 +268,7 @@ private[graft] object KeyedFrameMemo {
     * set 2min). Consumers still pinning a frame keep it reachable,
     * so this is promptness, never a correctness bet. */
   private val lastGcNanos = new java.util.concurrent.atomic.AtomicLong(0L)
-  private def gcNudgeAsync(): Unit = {
+  private[functions] def gcNudgeAsync(): Unit = {
     val now = System.nanoTime()
     val prev = lastGcNanos.get()
     if (now - prev > 60L * 1000L * 1000L * 1000L

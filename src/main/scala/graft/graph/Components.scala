@@ -671,6 +671,21 @@ object Components {
     ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
   }
 
+  /** [[releaseRound]] for a [[ckptFresh]] frame: its leaf is the
+    * re-anchored RDD, so the checkpoint to unpersist is the first
+    * persisted RDD down that leaf's lineage. Same contract: only once
+    * every consumer has been materialized. */
+  private def releaseFresh(df: DataFrame): Unit = {
+    def persisted(r: org.apache.spark.rdd.RDD[_]): Option[org.apache.spark.rdd.RDD[_]] =
+      if (r.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE) Some(r)
+      else r.dependencies.headOption.flatMap(d => persisted(d.rdd))
+    try if (!df.sparkSession.sparkContext.isStopped)
+      df.queryExecution.analyzed.collectFirst {
+        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
+      }.flatMap(persisted).foreach(_.unpersist(false))
+    catch { case _: Exception => () }
+  }
+
   /** Minimum spanning forest by BORŮVKA's algorithm — the canonical
     * DISTRIBUTED MSF (Kruskal/Prim are inherently sequential; Borůvka
     * rounds are pure groupBy/join): each surviving component picks
@@ -741,9 +756,11 @@ object Components {
           .distinct()
           .localCheckpoint(true)
         val picked = pickedW.select("a", "b", "w")
+        val prevForest = forest
         forest =
           if (forest == null) picked.localCheckpoint(true)
           else forest.unionByName(picked).distinct().localCheckpoint(true)
+        if (prevForest != null) releaseRound(prevForest)
         // merge picked components over the pick graph (one edge per
         // component — comp-count-sized, already carried in m)
         val h = pickedW.select("x", "y")
@@ -759,8 +776,9 @@ object Components {
         // pick chains are shorter than 2^innerRounds — always in
         // practice, and the regime the oracle's fixed unroll pins).
         val hCnt = h.count()
+        val onDriver = hCnt <= driverMergeCap
         val lab: DataFrame =
-          if (hCnt <= driverMergeCap) {
+          if (onDriver) {
             // Driver fast path — NOT an exact union-find: it emulates
             // the distributed innerRounds-bounded pointer-jump below
             // step for step (synchronous l ← min(l, min-neighbor-l,
@@ -780,6 +798,7 @@ object Components {
         // contract: relabel endpoints (components without a pick keep
         // their label — the left join's coalesce), drop intra-component
         // edges, keep the cheapest original edge per new component pair
+        val prevG = g
         g = g
           .join(lab.select(col("c").as("u"), col("l").as("plu")), Seq("u"), "left")
           .join(lab.select(col("c").as("v"), col("l").as("plv")), Seq("v"), "left")
@@ -794,9 +813,15 @@ object Components {
               col("m0.ob").as("ob"), col("u").as("cu"), col("v").as("cv"))
               .as("m"))
           .localCheckpoint(true)
+        // the new round is materialized: nothing reads the one it
+        // superseded, this round's picks or a distributed merge's labels
+        releaseRound(prevG)
+        releaseRound(pickedW)
+        if (!onDriver) releaseFresh(lab)
       }
       round += 1
     }
+    releaseRound(g)
     forest match {
       case null => edges.sparkSession.range(0)
         .select(col("id").as("edge_a"), col("id").as("edge_b"), col("id").as("w"))
@@ -841,9 +866,11 @@ object Components {
             coalesce(col("lj"), col("l"))).as("l"))
         .repartition(1))
       labStable = wide.filter(col("l") < col("prev")).isEmpty
+      releaseFresh(labD)
       labD = wide.select("c", "l")
       inner += 1
     }
+    releaseFresh(hs)
     labD
   }
 

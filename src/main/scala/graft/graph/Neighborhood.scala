@@ -79,27 +79,33 @@ object Neighborhood {
     * graph, not "nodes sharing a reach set". Direct self-cycles are
     * excluded by construction (reachWithin never emits start = node);
     * they belong to the Direct bucket of recursion().
+    *
+    * When the edges and the scope fit under
+    * `spark.sql.autoBroadcastJoinThreshold` the whole analysis runs on
+    * the driver ([[LocalGraph.recursionGroups]]), already in node
+    * order; a threshold of -1 forces the distributed rounds below.
     */
   def recursionGroups(edges: DataFrame, scope: DataFrame, maxDepth: Int = 3,
-      ccRounds: Int = 12): DataFrame = {
-    val reach = Traversal.reachWithin(edges, scope, maxDepth)
-      .join(scope.select(col("node").cast("long").as("node")).distinct(),
-        Seq("node"), "left_semi")
-      .localCheckpoint(true)
-    // reach rows are distinct and never start = node: a pair is mutual
-    // when it has two rows (grouped, not self-joined: see GraftSession)
-    val pairs = reach
-      .groupBy(least(col("start"), col("node")).as("src"),
-        greatest(col("start"), col("node")).as("dst"))
-      .agg(count(lit(1)).as("n"))
-      .filter(col("n") === 2)
-      .select("src", "dst")
-    val labels = Components.labelPropagation(pairs, maxIter = ccRounds)
-    labels
-      .select(col("node"), col("component").as("group_id"),
-        count(lit(1)).over(Window.partitionBy("component")).as("group_size"))
-      .orderBy("node")
-  }
+      ccRounds: Int = 12): DataFrame =
+    LocalGraph.recursionGroups(edges, scope, maxDepth, ccRounds).getOrElse {
+      val reach = Traversal.reachWithin(edges, scope, maxDepth)
+        .join(scope.select(col("node").cast("long").as("node")).distinct(),
+          Seq("node"), "left_semi")
+        .localCheckpoint(true)
+      // reach rows are distinct and never start = node: a pair is mutual
+      // when it has two rows (grouped, not self-joined: see GraftSession)
+      val pairs = reach
+        .groupBy(least(col("start"), col("node")).as("src"),
+          greatest(col("start"), col("node")).as("dst"))
+        .agg(count(lit(1)).as("n"))
+        .filter(col("n") === 2)
+        .select("src", "dst")
+      val labels = Components.labelPropagation(pairs, maxIter = ccRounds)
+      labels
+        .select(col("node"), col("component").as("group_id"),
+          count(lit(1)).over(Window.partitionBy("component")).as("group_size"))
+        .orderBy("node")
+    }
 
   /** Cross-binary call-graph diff — the reference's raison d'être
     * (comparing binaries) at the graph level: per caller present in

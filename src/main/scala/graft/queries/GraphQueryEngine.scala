@@ -9,8 +9,10 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType
   StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.functions.DriverCollect.bounded
 import graft.functions.KeyedFrameMemo
 import graft.functions.TextOps.sparkOrder
+import graft.graph.LocalGraph.{Csr, bfs, cycleTrails, trails}
 import graft.graph.Traversal
 import graft.importer.BinaryGraph
 import graft.search.Fulltext
@@ -154,25 +156,6 @@ class GraphQueryEngine(g: BinaryGraph) {
   /** A call row's offset as a long (0 when unparseable). */
   private def offsetOf(c: Column): Column =
     coalesce(graft.importer.Addresses.parseAddress(c), lit(0L))
-
-  /** `df`'s rows when at most `cap` of them, where `cap` is how many
-    * rows of the frame's default row size fit under
-    * `spark.sql.autoBroadcastJoinThreshold`; `None` when over the cap,
-    * or when the threshold is negative (Spark ships nothing whole).
-    * When Spark's own size estimate of `df` (its input files' size, as
-    * the broadcast rule reads it) is under the threshold, one job
-    * collects it whole; otherwise a `limit(cap + 1)` keeps the driver's
-    * share bounded, at the cost of Spark's take scanning a few files
-    * per job. */
-  private def bounded(df: DataFrame): Option[Array[Row]] = {
-    val threshold = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-    if (threshold < 0) None
-    else {
-      val cap = math.min(threshold / df.schema.defaultSize, Int.MaxValue - 1L).toInt
-      val fits = df.queryExecution.optimizedPlan.stats.sizeInBytes <= threshold
-      Some((if (fits) df else df.limit(cap + 1)).collect()).filter(_.length <= cap)
-    }
-  }
 
   /** A filter over `c` that keeps the non-null values of `rows`' first
     * column: a literal set, so a scan applies it without a join. */
@@ -320,7 +303,7 @@ class GraphQueryEngine(g: BinaryGraph) {
 
   /** (start_uid, path, offsets, depth) of every trail from the matching
     * functions over `adj`, in `orderBy(start_uid, depth, path)` order. */
-  private def trailRows(s: Snapshot, adj: Adjacency, functionName: String,
+  private def trailRows(s: Snapshot, adj: Csr, functionName: String,
       maxDepth: Int): Seq[(String, String, String, Int)] =
     startNodes(s, functionName)
       .flatMap(n => trails(adj, n, maxDepth).map { case (p, o, d) => (s.uidOf(n), p, o, d) })
@@ -413,10 +396,8 @@ class GraphQueryEngine(g: BinaryGraph) {
     case Some(s) =>
       val rows = startNodes(s, functionName).distinct.flatMap { n =>
         val uid = s.uidOf(n)
-        val direct =
-          if (s.out.getOrElse(n, Array.empty[(Long, Long)]).exists(_._1 == n))
-            Seq(Row(uid, "Direct", 1, 1L))
-          else Nil
+        val i = s.out.indexOf(n)
+        val direct = if (i >= 0 && s.out.hasSelfLoop(i)) Seq(Row(uid, "Direct", 1, 1L)) else Nil
         direct ++ cycleTrails(s.out, n, maxDepth).map { case (d, c) => Row(uid, "Indirect", d, c) }
       }
       local(StructType(Seq(StructField("uid", StringType),
@@ -771,9 +752,6 @@ class GraphQueryEngine(g: BinaryGraph) {
 
 object GraphQueryEngine {
 
-  /** Node id → (neighbour id, call offset) of each call row. */
-  private type Adjacency = Map[Long, Array[(Long, Long)]]
-
   /** A binary scope held on the driver: its function rows, its call
     * rows (from_uid, to_uid, call_offset, call_type, offset), and the
     * traversal view of those calls — forward (`out`) and reverse (`in`)
@@ -787,8 +765,8 @@ object GraphQueryEngine {
       for (a <- ids.get(r.getString(0)); b <- ids.get(r.getString(1)))
         yield (a, b, r.getLong(4))
     }
-    val out: Adjacency = edges.groupMap(_._1)(t => (t._2, t._3))
-    val in: Adjacency = edges.groupMap(_._2)(t => (t._1, t._3))
+    val out: Csr = Csr(edges.map(_._1), edges.map(_._2), edges.map(_._3))
+    val in: Csr = Csr(edges.map(_._2), edges.map(_._1), edges.map(_._3))
   }
 
   private object Snapshot {
@@ -815,63 +793,6 @@ object GraphQueryEngine {
   /** Spark's `xxhash64(uid)` of one string column, bit for bit. */
   private def xxhash64Of(s: String): Long =
     XXH64.hashUTF8String(UTF8String.fromString(s), Seed)
-
-  /** Minimum-depth BFS from `starts` up to `maxDepth` hops, as
-    * (node, depth ≥ 1); a start is never reported. [[Traversal.bfs]]
-    * on the driver. */
-  private def bfs(adj: Adjacency, starts: Seq[Long], maxDepth: Int): Seq[(Long, Int)] = {
-    val seen = scala.collection.mutable.HashSet.from(starts)
-    val out = Seq.newBuilder[(Long, Int)]
-    var frontier = starts
-    var d = 1
-    while (d <= maxDepth && frontier.nonEmpty) {
-      frontier = frontier.flatMap(n => adj.getOrElse(n, Array.empty[(Long, Long)]).map(_._1))
-        .filter(seen.add)
-      out ++= frontier.map(_ -> d)
-      d += 1
-    }
-    out.result()
-  }
-
-  /** Every trail (no (src, dst) pair used twice) of 1..maxDepth hops
-    * from `start`, as (path, offsets, depth) rendered as
-    * [[Traversal.walks]] renders them: `start->n1->n2`, `off1,off2`. */
-  private def trails(adj: Adjacency, start: Long, maxDepth: Int): Seq[(String, String, Int)] = {
-    val out = Seq.newBuilder[(String, String, Int)]
-    val used = scala.collection.mutable.HashSet.empty[(Long, Long)]
-    def go(node: Long, path: String, offsets: String, depth: Int): Unit =
-      if (depth < maxDepth) adj.getOrElse(node, Array.empty[(Long, Long)]).foreach {
-        case (next, off) =>
-          if (used.add((node, next))) {
-            val p = s"$path->$next"
-            val o = if (offsets.isEmpty) off.toString else s"$offsets,$off"
-            out += ((p, o, depth + 1))
-            go(next, p, o, depth + 1)
-            used.remove((node, next))
-          }
-      }
-    go(start, start.toString, "", 0)
-    out.result()
-  }
-
-  /** Indirect recursion of `start`: per depth 2..maxDepth, the number
-    * of trails over non-self-loop calls that return to `start` —
-    * [[Traversal.recursion]]'s counts, by enumeration at any depth. */
-  private def cycleTrails(adj: Adjacency, start: Long, maxDepth: Int): Seq[(Int, Long)] = {
-    val counts = new Array[Long](maxDepth + 1)
-    val used = scala.collection.mutable.HashSet.empty[(Long, Long)]
-    def go(node: Long, depth: Int): Unit =
-      if (depth < maxDepth) adj.getOrElse(node, Array.empty[(Long, Long)]).foreach {
-        case (next, _) =>
-          if (next != node && used.add((node, next))) {
-            if (next == start) counts(depth + 1) += 1
-            go(next, depth + 1)
-            used.remove((node, next))
-          }
-      }
-    go(start, 0)
-    (2 to maxDepth).filter(counts(_) > 0).map(d => d -> counts(d))
-  }
 
   /** (uid → dense long id) dictionary: xxhash64, embarrassingly
     * parallel; a collision (~n²/2⁶⁵) would silently merge two

@@ -1,9 +1,13 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
+import graft.functions.DriverCollect.bounded
 import graft.functions.KeyedFrameMemo.iterate
 import graft.streaming.EventStreams
 
@@ -842,43 +846,77 @@ object TemporalOps {
     * the ONE (ts, event_id)-ordered lag window producing the count
     * matrix — the iteration itself never touches the event stream
     * again, so 100 TB costs exactly one sort-shuffle more than a
-    * count. */
+    * count. When the types and the count matrix fit under
+    * `spark.sql.autoBroadcastJoinThreshold` both are collected once and
+    * the rounds run on the driver ([[markovRounds]]); otherwise each
+    * round is a checkpointed join. */
   def markovStationary(events: DataFrame, rounds: Int = 8): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-    val c = events
+    val counts = events
       .withColumn("from_type", lag(col("event_type"), 1).over(w))
       .filter(col("from_type").isNotNull)
       .groupBy(col("from_type"), col("event_type").as("to_type"))
       .agg(count(lit(1)).as("n"))
-      .localCheckpoint(true)
-    val totals = c.groupBy("from_type").agg(sum(col("n")).as("row_total"))
-    val cm = c.join(totals, "from_type").localCheckpoint(true)
-    val types = events.select(col("event_type").as("type")).distinct()
-      .localCheckpoint(true)
-    val k = types.count()
-    // eager per-round materialization: the chain state is |types|
-    // rows, but left un-checkpointed Catalyst re-optimizes the whole
-    // 8-round join tree at the end (measured 12 s of pure planning
-    // at sf0.1 for 5 types)
-    iterate(types.withColumn("pi", lit(1000000L / math.max(k, 1L))), rounds,
-        c, cm, types) { pi =>
-      val stepped = pi.join(cm, pi("type") === cm("from_type"))
-        .groupBy(col("to_type").as("type2"))
-        .agg(sum(expr("(pi * n) div row_total")).as("pin"))
-      // no-outgoing types keep their mass: left join falls back to pi
-      val dangling = pi.join(totals, pi("type") === totals("from_type"), "left_anti")
-        .select(col("type").as("type2"), col("pi").as("pin"))
-      // A SINK type (inflow but no outgoing steps) appears in BOTH
-      // stepped and dangling — its new mass is held + received, so the
-      // union is re-aggregated per type before the join (a bare union
-      // would carry two rows per sink type, one extra per round,
-      // breaking the one-row-per-type contract)
-      val merged = stepped.unionByName(dangling)
-        .groupBy("type2").agg(sum(col("pin")).as("pin"))
-      types.join(merged, col("type") === col("type2"), "left")
-        .select(col("type"), coalesce(col("pin"), lit(0L)).as("pi"))
-    }.select(col("type").as("event_type"), col("pi").as("pi_ppm"))
-      .orderBy("event_type")
+    val typeFrame = events.select(col("event_type").as("type")).distinct()
+    val onDriver = for {
+      types <- bounded(typeFrame)
+      matrix <- bounded(counts)
+    } yield events.sparkSession.createDataFrame(
+        markovRounds(types.map(_.get(0)), matrix, rounds)
+          .map { case (t, pi) => Row(t, pi) }.asJava,
+        StructType(Seq(typeFrame.schema.head.copy(name = "event_type"),
+          StructField("pi_ppm", LongType, false))))
+    onDriver.getOrElse {
+      val c = counts.localCheckpoint(true)
+      val totals = c.groupBy("from_type").agg(sum(col("n")).as("row_total"))
+      val cm = c.join(totals, "from_type").localCheckpoint(true)
+      val types = typeFrame.localCheckpoint(true)
+      val k = types.count()
+      // eager per-round materialization: the chain state is |types|
+      // rows, but left un-checkpointed Catalyst re-optimizes the whole
+      // 8-round join tree at the end (measured 12 s of pure planning
+      // at sf0.1 for 5 types)
+      iterate(types.withColumn("pi", lit(1000000L / math.max(k, 1L))), rounds,
+          c, cm, types) { pi =>
+        val stepped = pi.join(cm, pi("type") === cm("from_type"))
+          .groupBy(col("to_type").as("type2"))
+          .agg(sum(expr("(pi * n) div row_total")).as("pin"))
+        // no-outgoing types keep their mass: left join falls back to pi
+        val dangling = pi.join(totals, pi("type") === totals("from_type"), "left_anti")
+          .select(col("type").as("type2"), col("pi").as("pin"))
+        // A SINK type (inflow but no outgoing steps) appears in BOTH
+        // stepped and dangling — its new mass is held + received, so the
+        // union is re-aggregated per type before the join (a bare union
+        // would carry two rows per sink type, one extra per round,
+        // breaking the one-row-per-type contract)
+        val merged = stepped.unionByName(dangling)
+          .groupBy("type2").agg(sum(col("pin")).as("pin"))
+        types.join(merged, col("type") === col("type2"), "left")
+          .select(col("type"), coalesce(col("pin"), lit(0L)).as("pi"))
+      }.select(col("type").as("event_type"), col("pi").as("pi_ppm"))
+    }.orderBy("event_type")
+  }
+
+  /** The rounds of [[markovStationary]] on the driver, over the
+    * collected types (null included) and (from_type, to_type, n)
+    * count rows: the distributed rounds' exact Long arithmetic, with
+    * ANSI's overflow error. A null type matches no join key, so from
+    * the first round on it holds 0 and mass stepping into it is lost,
+    * as in the distributed left join. */
+  private def markovRounds(types: Array[Any], matrix: Array[Row],
+      rounds: Int): Seq[(Any, Long)] = {
+    val totals = matrix.groupMapReduce(_.get(0))(_.getLong(2))(Math.addExact)
+    var pi: Map[Any, Long] =
+      types.map(_ -> 1000000L / math.max(types.length, 1).toLong).toMap
+    for (_ <- 1 to rounds) {
+      val stepped = matrix.iterator.filter(r => pi.contains(r.get(0))).map { r =>
+        r.get(1) -> Math.multiplyExact(pi(r.get(0)), r.getLong(2)) / totals(r.get(0))
+      }
+      val dangling = types.iterator.filterNot(totals.contains).map(t => t -> pi(t))
+      val merged = (stepped ++ dangling).toSeq.groupMapReduce(_._1)(_._2)(Math.addExact)
+      pi = types.map(t => t -> (if (t == null) 0L else merged.getOrElse(t, 0L))).toMap
+    }
+    types.toSeq.map(t => t -> pi(t))
   }
 
   /** Benford's-law first-digit audit over the value stream — the

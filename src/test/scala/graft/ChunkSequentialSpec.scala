@@ -18,7 +18,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * already-materialized RDD scans. (The KtrussCompareProbe pattern:
   * gate the mechanism, not the wall time.)
   */
-class ChunkSequentialSpec extends AnyFunSuite {
+class ChunkSequentialSpec extends AnyFunSuite with BroadcastOff {
   lazy val spark: SparkSession = GraftSession.local(4)
   private val dir = "/root/testdata/sf0.001"
 
@@ -70,6 +70,11 @@ class ChunkSequentialSpec extends AnyFunSuite {
   }
 
   test("start-chunked recursion DP: returned plan unions materialized sweep scans only") {
+    // broadcast off: a graph this small would run the DP on the driver
+    withoutBroadcast(chunkedRecursion())
+  }
+
+  private def chunkedRecursion(): Unit = {
     import spark.implicits._
     // self-loop, a 2-cycle, two overlapping 3-cycles, a 4-cycle —
     // exercises every depth bucket plus the d=4 trail correction
@@ -122,6 +127,11 @@ class ChunkSequentialSpec extends AnyFunSuite {
 
   test("caller bound hints: zero-count single-pass gate is output-identical " +
     "and over-bounds fall through to the measured dispatch") {
+    // broadcast off: a graph this small would run the DP on the driver
+    withoutBroadcast(boundHints())
+  }
+
+  private def boundHints(): Unit = {
     import spark.implicits._
     val edges = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 1L), (1L, 3L),
       (3L, 4L), (4L, 1L), (5L, 5L), (4L, 2L))

@@ -167,6 +167,17 @@ class CliSpec extends AnyFunSuite {
     assert(search.Fulltext.searchIndex(idx, Seq("fresh", "delta")).count() >= 1)
   }
 
+  test("import prints the saved store's stats") {
+    val res = getClass.getResource("/analysis").getPath
+    val st = java.nio.file.Files.createTempDirectory("cli_stats").toString + "/db"
+    val csv = capture2(st, "import", "directory", res, "--no-validate", "--format", "csv")
+      .linesIterator.toSeq
+    val want = importer.JsonImporter.stats(importer.GraphStore.load(spark, st))
+    assert(csv.head.split(",").toSeq == want.columns.toSeq)
+    assert(csv.tail == Seq(want.head().toSeq.mkString(",")))
+    assert(want.head().getLong(1) > 0)
+  }
+
   private def capture2(st: String, args: String*): String = {
     val bos = new ByteArrayOutputStream()
     Console.withOut(new PrintStream(bos, true, "UTF-8")) {

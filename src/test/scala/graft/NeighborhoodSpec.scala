@@ -9,7 +9,7 @@ import graft.graph.{Neighborhood, Ranking}
   * mutual-recursion groups) and personalized PageRank on hand-checked
   * graphs.
   */
-class NeighborhoodSpec extends AnyFunSuite {
+class NeighborhoodSpec extends AnyFunSuite with BroadcastOff {
   lazy val spark: SparkSession = GraftSession.local(4)
 
   def edges(rows: (Long, Long)*) = {
@@ -62,8 +62,10 @@ class NeighborhoodSpec extends AnyFunSuite {
     // at depth 1 only direct back-edges count: 1↔2, 2↔3. The group
     // must still be {1,2,3} via the PAIR GRAPH component, group_id 1.
     val g = edges(1L -> 2L, 2L -> 1L, 2L -> 3L, 3L -> 2L, 4L -> 1L)
-    val r = Neighborhood.recursionGroups(g, nodes(1L, 2L, 3L, 4L), maxDepth = 1)
-      .collect()
+    // broadcast off, here and below: graphs this small would run the
+    // reach rounds on the driver (LocalGraphSpec pins that path to these)
+    val r = withoutBroadcast(Neighborhood.recursionGroups(g, nodes(1L, 2L, 3L, 4L), maxDepth = 1)
+      .collect())
       .map(x => (x.getAs[Long]("node"), x.getAs[Long]("group_id"),
         x.getAs[Long]("group_size"))).toSet
     assert(r == Set((1L, 1L, 3L), (2L, 1L, 3L), (3L, 1L, 3L)))
@@ -73,8 +75,8 @@ class NeighborhoodSpec extends AnyFunSuite {
     val g = edges(1L -> 2L, 2L -> 1L, 5L -> 6L, 6L -> 5L, 7L -> 7L)
     // 5↔6 mutual but 6 is out of scope; 7's self-loop is Direct
     // recursion, not a group.
-    val r = Neighborhood.recursionGroups(g, nodes(1L, 2L, 5L, 7L), maxDepth = 2)
-      .collect().map(x => (x.getLong(0), x.getAs[Long]("group_id"))).toSet
+    val r = withoutBroadcast(Neighborhood.recursionGroups(g, nodes(1L, 2L, 5L, 7L), maxDepth = 2)
+      .collect()).map(x => (x.getLong(0), x.getAs[Long]("group_id"))).toSet
     assert(r == Set((1L, 1L), (2L, 1L)))
   }
 

@@ -15,9 +15,10 @@ import graft.queries.TemporalOps
   * returned and the identity memos of its input (the node set, the
   * distinct edge set). Superseded rounds and private inputs are gone
   * before any GC runs. Releasing the input's memos then leaves only
-  * the round, and that goes once the result is garbage.
+  * the round, and that goes once the result is garbage. An operator
+  * whose rounds ran on the driver leaves nothing persisted.
   */
-class RoundLifecycleSpec extends AnyFunSuite with PersistedRdds {
+class RoundLifecycleSpec extends AnyFunSuite with PersistedRdds with BroadcastOff {
   lazy val spark: SparkSession = GraftSession.local(4)
 
   /** A fresh 60-node graph: a ring, chords, a duplicate edge and a
@@ -99,9 +100,33 @@ class RoundLifecycleSpec extends AnyFunSuite with PersistedRdds {
     val v = Similarity.withNorm(emb).select("vec_id", "qv", "nrm").localCheckpoint(true)
     keepsOneRound(v, 0)(Similarity.kmeansCentroidsFromNorm(_, 4, 4))
   }
-  test("markovStationary") {
-    val events = graph().select(col("src").as("user_id"), col("dst").as("event_id"),
+  private def events(): DataFrame =
+    graph().select(col("src").as("user_id"), col("dst").as("event_id"),
       timestamp_seconds(col("dst")).as("ts"), (col("dst") % 4).cast("string").as("event_type"))
-    keepsOneRound(events, 0)(TemporalOps.markovStationary(_, 4))
+
+  // a matrix under the broadcast threshold runs its rounds on the
+  // driver and leaves nothing persisted
+  test("markovStationary") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    assert(TemporalOps.markovStationary(events(), 4).collect().nonEmpty)
+    assert(persistedSince(before).isEmpty, s"persisted: ${persistedSince(before)}")
+  }
+  test("markovStationary, over the cap") {
+    withoutBroadcast(keepsOneRound(events(), 0)(TemporalOps.markovStationary(_, 4)))
+  }
+
+  // Borůvka's rounds are convergent, outside `iterate`, but keep the
+  // same rule: each superseded round goes once its successor is stored
+  test("minSpanningForest") {
+    keepsOneRound(graph(), 0)(Components.minSpanningForest(_, "weight"))
+  }
+  test("distributedBoundedMerge keeps only its labels") {
+    val s = spark
+    import s.implicits._
+    val h = (0L until 40L).map(i => (i, i + 1)).toDF("x", "y")
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val labels = Components.distributedBoundedMerge(h, 8)
+    assert(labels.collect().length == 41)
+    assert(persistedSince(before).size == 1, s"persisted: ${persistedSince(before)}")
   }
 }

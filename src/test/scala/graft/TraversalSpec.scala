@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions.col
 /** Unit semantics for the traversal/component primitives on a tiny
   * hand-checked graph: 1→2→3→1 cycle, 2→4, 5→5 self-loop, 6→7.
   */
-class TraversalSpec extends AnyFunSuite {
+class TraversalSpec extends AnyFunSuite with BroadcastOff {
   lazy val spark: SparkSession = GraftSession.local(4)
 
   def edges = {
@@ -40,9 +40,11 @@ class TraversalSpec extends AnyFunSuite {
     assert(w == Set(("1->2", "10"), ("1->2->3", "10,20"), ("1->2->4", "10,21")))
   }
 
+  // the recursion cases run with broadcast off: graphs this small would
+  // run the DP on the driver (LocalGraphSpec pins that path to this one)
   test("recursion: direct self-loop + indirect cycle") {
-    val r = Traversal.recursion(edges, starts(1L), maxDepth = 4)
-      .collect()
+    val r = withoutBroadcast(Traversal.recursion(edges, starts(1L), maxDepth = 4)
+      .collect())
       .map(x => (x.getAs[Long]("node"), x.getAs[String]("call_type"),
         x.getAs[Int]("depth"), x.getAs[Long]("n_cycles"))).toSet
     assert(r.contains((5L, "Direct", 1, 1L)))
@@ -64,8 +66,8 @@ class TraversalSpec extends AnyFunSuite {
   }
 
   test("recursion counts trail cycles only (depth-4 correction)") {
-    val r = Traversal.recursion(twoCycle, starts(10L), maxDepth = 4)
-      .collect()
+    val r = withoutBroadcast(Traversal.recursion(twoCycle, starts(10L), maxDepth = 4)
+      .collect())
       .map(x => (x.getAs[String]("call_type"), x.getAs[Int]("depth"),
         x.getAs[Long]("n_cycles"))).toSet
     // One 2-cycle; the walk 10→11→10→11→10 (depth 4) reuses edges → no
@@ -85,7 +87,7 @@ class TraversalSpec extends AnyFunSuite {
     def normalize(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(x => (x.getAs[Long]("node"), x.getAs[String]("call_type"),
         x.getAs[Int]("depth"), x.getAs[Long]("n_cycles"))).toSet
-    assert(normalize(Traversal.recursion(g, st, maxDepth = 4)) ==
+    assert(withoutBroadcast(normalize(Traversal.recursion(g, st, maxDepth = 4))) ==
       normalize(Traversal.recursionTrails(g, st, maxDepth = 4)))
   }
 
