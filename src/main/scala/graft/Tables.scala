@@ -78,6 +78,11 @@ object Tables {
   * build side with a hint.
   */
 object GraftSession {
+  /** A library knob as a number: the system property `prop`, else the
+    * environment variable `env`. */
+  private[graft] def knob(prop: String, env: String): Option[Long] =
+    sys.props.get(prop).orElse(sys.env.get(env)).map(_.toLong)
+
   /** Whole-stage class cache entries (measured working sets above). */
   private val CodegenCacheEntries = 512
 

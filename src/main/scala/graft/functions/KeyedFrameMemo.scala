@@ -5,6 +5,8 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 
+import graft.GraftSession.knob
+
 /** The one cross-call frame cache: every shared artifact the library
   * reuses across calls (traversal projections, the triangle family's
   * adjacency, the GraphQueries (session, dir) labelings, the text and
@@ -194,9 +196,8 @@ private[graft] object KeyedFrameMemo {
     * between sim_topk and embed_knn_purity (134 s rebuild). Override
     * via GRAFT_MEMO_BUDGET_MB (env) or -Dgraft.memo.budget.mb. */
   private[graft] def budgetBytes: Long =
-    sys.props.get("graft.memo.budget.mb")
-      .orElse(sys.env.get("GRAFT_MEMO_BUDGET_MB"))
-      .map(_.toLong << 20)
+    knob("graft.memo.budget.mb", "GRAFT_MEMO_BUDGET_MB")
+      .map(_ << 20)
       .getOrElse(math.max(6L << 30, Runtime.getRuntime.maxMemory / 4))
 
   /** Persisted bytes (memory + disk) of the frame's checkpointed

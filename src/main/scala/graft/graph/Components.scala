@@ -2,7 +2,9 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge.localCheckpointNoStats
 
+import graft.functions.DriverCollect.bounded
 import graft.functions.KeyedFrameMemo.{iterate, releaseRound}
 
 /** Connected components via iterative min-label propagation.
@@ -13,9 +15,11 @@ import graft.functions.KeyedFrameMemo.{iterate, releaseRound}
   * shuffle-on-node-id, and the loop stops as soon as an iteration
   * changes no label (labels are monotonically non-increasing, so
   * "no change" is a true fixpoint). `maxIter` is only a safety
-  * bound; iterations needed = graph diameter. Each round is
-  * materialized with localCheckpoint so round d doesn't re-derive
-  * rounds 1..d-1.
+  * bound; iterations needed = graph diameter. Components, both SCC
+  * colourings and the MSF merge run on one loop, [[minLabels]]: each
+  * round is stored without Spark's inherited size estimate, which
+  * would otherwise compound through the rounds' joins until planning
+  * alone takes minutes, and the round it superseded is released.
   */
 object Components {
 
@@ -41,37 +45,61 @@ object Components {
       .repartition(
         edges.sparkSession.sessionState.conf.numShufflePartitions, col("b"))
       .localCheckpoint(true)
-    var labels = und.select(col("a").as("node")).distinct()
-      .withColumn("component", col("node"))
-      .localCheckpoint(true)
+    val (labels, converged) = minLabels(und, identityLabels(und), jump = false, maxIter)
+    releaseRound(und)
+    (labels.select(col("node"), col("l").as("component")), converged)
+  }
+
+  /** Each `a` of the probe frame `(a, b)` labelled with itself: (node, l). */
+  private def identityLabels(probe: DataFrame): DataFrame =
+    probe.select(col("a").as("node")).distinct().withColumn("l", col("node"))
+
+  /** The one min-label fixpoint loop. `probe` holds (a, b) rows: b's
+    * label flows to a. `start` is the round-0 labelling (node, l) and
+    * labels every node the probe names. Each round takes, per node,
+    * the min of three labels of the round before: its own, those
+    * reaching it through the probe, and with `jump` the label of its
+    * label. The jump is pointer doubling: a chain whose ids rise in
+    * the direction its labels flow collapses in O(log length) rounds
+    * instead of O(length), and every label taken still reaches the
+    * node through the probe, so the fixpoint is the same. Labels only fall, so the loop stops at the first round that
+    * lowers none, or after `rounds`. Returns (node, l) and whether
+    * that fixpoint was reached.
+    *
+    * A round is one aggregation over each node's own row and its
+    * messages; every join hints the label side as the hash build side,
+    * so the plan does not depend on which input AQE sees finish first
+    * (see GraftSession). Each round is stored without the inherited
+    * size estimate ([[localCheckpointNoStats]]): the jump joins the
+    * labels with themselves, and a carried estimate would multiply
+    * every round. The superseded round is released once its successor
+    * is stored. The caller owns `probe`. [[LocalGraph.minLabels]] is
+    * the same loop on the driver. */
+  private[graft] def minLabels(probe: DataFrame, start: DataFrame, jump: Boolean,
+      rounds: Int): (DataFrame, Boolean) = {
+    var labels = localCheckpointNoStats(start.select(col("node"), col("l")))
     var converged = false
-    var iter = 0
-    // the frame whose checkpoint blocks back `labels` — released as
-    // soon as the round that superseded it is materialized (the
-    // betweenness releaseRound discipline)
-    var labelsBack = labels
-    while (!converged && iter < maxIter) {
-      // Next label = min over the node's own row (which also carries
-      // the previous label for the convergence check) and its neighbour
-      // messages, in one aggregation; the hint pins the build side (see
-      // GraftSession on AQE-chosen sides). Labels only ever decrease, so
-      // zero strict decreases is a true fixpoint.
-      val messages = und
-        .join(labels.hint("shuffle_hash"), und("b") === labels("node"))
-        .select(col("a").as("node"), col("component"), lit(null).cast("long").as("own"))
-      val nextWide = labels
-        .select(col("node"), col("component"), col("component").as("own"))
+    var round = 0
+    while (!converged && round < rounds) {
+      val viaProbe = probe
+        .join(labels.select(col("node").as("b"), col("l").as("lb")).hint("shuffle_hash"), "b")
+        .select(col("a").as("node"), col("lb").as("l"))
+      val viaJump = labels
+        .join(labels.select(col("node").as("j"), col("l").as("lj")).hint("shuffle_hash"),
+          col("l") === col("j"))
+        .select(col("node"), col("lj").as("l"))
+      val messages = (if (jump) viaProbe.unionByName(viaJump) else viaProbe)
+        .withColumn("own", lit(null).cast("long"))
+      val next = localCheckpointNoStats(labels
+        .select(col("node"), col("l"), col("l").as("own"))
         .unionByName(messages)
         .groupBy("node")
-        .agg(max(col("own")).as("prev"), min(col("component")).as("component"))
-        .localCheckpoint(true)
-      converged = nextWide.filter(col("component") < col("prev")).isEmpty
-      releaseRound(labelsBack)
-      labels = nextWide.select("node", "component")
-      labelsBack = nextWide
-      iter += 1
+        .agg(max(col("own")).as("prev"), min(col("l")).as("l")))
+      converged = next.filter(col("l") < col("prev")).isEmpty
+      releaseRound(labels)
+      labels = next.select("node", "l")
+      round += 1
     }
-    releaseRound(und)
     (labels, converged)
   }
 
@@ -129,10 +157,9 @@ object Components {
       releaseRound(prevE)
       round += 1
     }
-    if (!converged)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"alternatingStar: round budget $maxRounds exhausted before the edge-set " +
-          "fixpoint; returned components may be under-merged")
+    if (!converged) throw new IllegalStateException(
+      s"alternatingStar: maxRounds = $maxRounds rounds did not reach the edge-set " +
+        "fixpoint, so the components would be under-merged")
     // fixpoint edge set is a star forest: (v, component-min) rows;
     // centers and isolated nodes label themselves
     nodes.join(e.groupBy(col("a").as("node2")).agg(min(col("b")).as("c")),
@@ -305,13 +332,24 @@ object Components {
     * the remaining graph is a singleton SCC, peeled to fixpoint
     * (chains and DAG fringes fall out here in O(longest chain)
     * cheap degree-filter rounds); (2) COLOR — propagate the minimum
-    * forward-reaching node id to fixpoint (the [[labelPropagation]]
-    * loop, directed); (3) EXTRACT — color roots p (color(p) = p) are
+    * forward-reaching node id to fixpoint ([[minLabels]] over the
+    * edges); (3) EXTRACT — color roots p (color(p) = p) are
     * pivots, and the nodes of color p that reach p BACKWARD through
     * same-color edges are exactly SCC(p), all extracted at once with
-    * scc_id = p. Removing a complete SCC never severs another SCC's
-    * internal paths (a path between mutually-reachable nodes cannot
-    * leave their SCC), so every extraction is final.
+    * scc_id = p (the same loop, backward). Removing a complete SCC
+    * never severs another SCC's internal paths (a path between
+    * mutually-reachable nodes cannot leave their SCC), so every
+    * extraction is final.
+    *
+    * Both colourings POINTER JUMP: color(color(v)) of the round before
+    * also reaches v, so taking it each round turns the O(diameter)
+    * min-flood into O(log diameter) rounds on a path whose ids rise
+    * along its edges (the backward pass negates ids to favour the same
+    * orientation; a long cycle whose ids fall along its edges still
+    * needs a round per node). The fixpoint is unchanged: every label
+    * taken reaches v, and at a fixpoint color(v) ≤ color(u) on every
+    * edge u → v, so color(v) is the minimum forward reacher (and the
+    * oracle's transitive closure never sees a round).
     *
     * The emitted scc_id is CANONICAL — the minimum member id: a
     * color root has no smaller id reaching it, and any SCC member
@@ -322,13 +360,13 @@ object Components {
     * while Spark runs the iterative form whose rounds are all
     * node-keyed joins/aggs.
     *
-    * Budgets mirror [[alternatingStar]]: generous bounds + a WARN on
-    * exhaustion (inner fixpoints need ~diameter rounds; outer rounds
-    * ~pivot layers — both small on real callgraphs).
+    * Budgets are generous (inner fixpoints need ~log diameter rounds;
+    * outer rounds ~pivot layers — both small on real callgraphs). A
+    * used-up budget raises an error: partial colours give wrong
+    * scc_ids, and an unfinished outer loop would drop nodes.
     */
   def stronglyConnected(edges: DataFrame, maxOuter: Int = 10,
       maxInner: Int = 40): DataFrame = {
-    val log = org.slf4j.LoggerFactory.getLogger(getClass)
     // no dedup: every step (min-aggs, degree presence, distinct
     // frontiers) is insensitive to duplicate edges, so the input
     // rides as-is — one full shuffle saved up front
@@ -462,63 +500,28 @@ object Components {
         val ep =
           if (eShared) e
           else e.repartition(nPart, col("src")).localCheckpoint(true)
-        var c = nodes.withColumn("color", col("node")).localCheckpoint(true)
-        var cBack = c
-        var converged = false
-        var it = 0
-        while (!converged && it < maxInner) {
-          // SHUFFLE_HASH on the label side: the default sort-merge
-          // join re-sorts the full pinned edge frame on EVERY round;
-          // hashing the 1-row-per-node label frame streams it instead
-          // (the betweenness probe lesson; partition-local at any m)
-          val nbrMin = ep
-            .join(c.select(col("node").as("u"), col("color").as("cu"))
-              .hint("shuffle_hash"), col("src") === col("u"))
-            .groupBy(col("dst").as("node2"))
-            .agg(min(col("cu")).as("m"))
-          val relaxed = c
-            .join(nbrMin, col("node") === col("node2"), "left")
-            .select(col("node"), col("color").as("prev"),
-              least(col("color"), coalesce(col("m"), col("color"))).as("color"))
-          // POINTER JUMP (pointer-doubling shortcut): forward
-          // reachability is transitive, so color(color(v)) is also a
-          // valid forward-reacher of v — composing it each round
-          // turns the O(diameter) min-flood into O(log diameter)
-          // without changing the fixpoint (a state stable under
-          // relax+jump is stable under relax alone, and the oracle's
-          // transitive closure never sees intermediate rounds)
-          val next = relaxed
-            .join(relaxed.select(col("node").as("rn"), col("color").as("rc"))
-              .hint("shuffle_hash"), col("color") === col("rn"), "left")
-            .select(col("node"), col("prev"),
-              least(col("color"), coalesce(col("rc"), col("color"))).as("color"))
-            .localCheckpoint(true)
-          converged = next.filter(col("color") < col("prev")).isEmpty
-          releaseRound(cBack)
-          c = next.select("node", "color")
-          cBack = next
-          it += 1
-        }
-        if (!converged)
-          log.warn(s"stronglyConnected: color fixpoint not reached in $maxInner " +
-            "rounds — graph diameter exceeds the inner budget; raise maxInner")
-        // ---- backward sweep inside each color class, from the pivots:
-        // frontier-style BFS (probe only the newly-reached level each
-        // round, not the whole reached set), same-color edges
-        // pre-partitioned on the probe key dst. When one color flooded
+        // ---- forward colouring: each node's minimum forward reacher
+        // (probe (dst, src): a src's colour flows to its dst)
+        val (c, colored) = minLabels(ep.select(col("dst").as("a"), col("src").as("b")),
+          nodes.select(col("node"), col("node").as("l")), jump = true, maxInner)
+        if (!colored) throw new IllegalStateException(
+          s"stronglyConnected: the forward colouring did not converge in maxInner = " +
+            s"$maxInner rounds")
+        // ---- the same-color edges the backward colouring runs on,
+        // pre-partitioned on its probe key dst. When one color flooded
         // the whole remaining graph (the giant-SCC round — the common
         // case on real callgraphs) every edge is same-color by
         // construction and the two restriction joins are skipped.
         // one color left ⇔ min == max — two simple aggs, not a
         // two-phase countDistinct over the label frame
-        val cr = c.agg(min(col("color")).as("mn"), max(col("color")).as("mx")).first()
+        val cr = c.agg(min(col("l")).as("mn"), max(col("l")).as("mx")).first()
         val oneColor = cr.getLong(0) == cr.getLong(1)
         val sameColor =
           if (oneColor) ep
           else ep
-            .join(c.select(col("node").as("u"), col("color").as("cu"))
+            .join(c.select(col("node").as("u"), col("l").as("cu"))
               .hint("shuffle_hash"), col("src") === col("u"))
-            .join(c.select(col("node").as("w"), col("color").as("cw"))
+            .join(c.select(col("node").as("w"), col("l").as("cw"))
               .hint("shuffle_hash"), col("dst") === col("w"))
             .filter(col("cu") === col("cw"))
             .select(col("src"), col("dst"))
@@ -532,57 +535,41 @@ object Components {
             .repartition(
               e.sparkSession.sessionState.conf.numShufflePartitions, col("dst"))
             .localCheckpoint(true)
-        // ---- extraction as a BACKWARD min-coloring with the same
-        // pointer jump: bcolor(v) = min id v REACHES through
-        // same-color edges (propagated src←dst, shortcut each round).
-        // A color class's root p is its minimum id, so v ∈ SCC(p) ⇔
-        // color(v) = p ∧ bcolor(v) = p — the frontier BFS from the
-        // roots computed the same set in O(SCC diameter) rounds; the
-        // doubled coloring needs O(log diameter).
-        var b = c.select(col("node"), col("node").as("bcolor"))
-          .localCheckpoint(true)
-        var bBack = b
-        var settled = false
-        it = 0
-        while (!settled && it < maxInner) {
-          val nbrMin2 = ec
-            .join(b.select(col("node").as("w2"), col("bcolor").as("bw"))
-              .hint("shuffle_hash"), col("dst") === col("w2"))
-            .groupBy(col("src").as("node2"))
-            .agg(min(col("bw")).as("m2"))
-          val relaxed2 = b
-            .join(nbrMin2, col("node") === col("node2"), "left")
-            .select(col("node"), col("bcolor").as("prev2"),
-              least(col("bcolor"), coalesce(col("m2"), col("bcolor"))).as("bcolor"))
-          val next2 = relaxed2
-            .join(relaxed2.select(col("node").as("rn2"), col("bcolor").as("rc2"))
-              .hint("shuffle_hash"), col("bcolor") === col("rn2"), "left")
-            .select(col("node"), col("prev2"),
-              least(col("bcolor"), coalesce(col("rc2"), col("bcolor"))).as("bcolor"))
-            .localCheckpoint(true)
-          settled = next2.filter(col("bcolor") < col("prev2")).isEmpty
-          releaseRound(bBack)
-          b = next2.select("node", "bcolor")
-          bBack = next2
-          it += 1
-        }
-        if (!settled)
-          log.warn(s"stronglyConnected: backward coloring not settled in " +
-            s"$maxInner rounds — raise maxInner")
-        val members = c.join(b.hint("shuffle_hash"), Seq("node"))
-          .filter(col("bcolor") === col("color"))
-          .select(col("node"), col("color").as("scc_id"))
+        // ---- extraction as a BACKWARD colouring of the same-color
+        // edges: v ∈ SCC(p) ⇔ color(v) = p ∧ v reaches p. The jump only
+        // shortcuts a path whose ids rise in the direction its labels
+        // flow, and labels flow against the edges here but along them
+        // above, so with the same ids a cycle whose ids rise along its
+        // edges would take one round per node in this pass. It runs on
+        // NEGATED ids instead (ANSI mode fails loudly on Long.MinValue),
+        // and each root starts from Long.MinValue, which no negated id
+        // equals: a node ends on it exactly when it reaches its root.
+        val (b, settled) = minLabels(
+          ec.select((-col("src")).as("a"), (-col("dst")).as("b")),
+          c.select((-col("node")).as("node"),
+            when(col("l") === col("node"), lit(Long.MinValue)).otherwise(-col("node"))
+              .as("l")),
+          jump = true, maxInner)
+        if (!settled) throw new IllegalStateException(
+          s"stronglyConnected: the backward colouring did not converge in maxInner = " +
+            s"$maxInner rounds")
+        val members = c
+          .join(b.filter(col("l") === Long.MinValue).select((-col("node")).as("node"))
+            .hint("shuffle_hash"), Seq("node"))
+          .select(col("node"), col("l").as("scc_id"))
           .localCheckpoint(true)
         found += members
         // members is the last consumer of both fixpoint frames and
         // of the private edge copies — release them (never the
         // shared memo frames other operators ride)
-        releaseRound(cBack)
-        releaseRound(bBack)
+        releaseRound(c)
+        releaseRound(b)
         if (!eShared) releaseRound(ep)
         if (!(oneColor && eShared)) releaseRound(ec)
+        val unextracted = nodes
         nodes = nodes.join(members.select("node"), Seq("node"), "left_anti")
           .localCheckpoint(true)
+        releaseRound(unextracted)
         done = nodes.isEmpty
         // restrict e only if another outer round will actually run —
         // on the (common) final round the filter's output is dead
@@ -597,11 +584,13 @@ object Components {
       }
       outer += 1
     }
-    if (!done)
-      log.warn(s"stronglyConnected: outer budget $maxOuter exhausted with nodes " +
-        "remaining — their SCCs are NOT emitted; raise maxOuter")
+    if (!done) throw new IllegalStateException(
+      s"stronglyConnected: maxOuter = $maxOuter rounds left nodes without an SCC")
     if (found.isEmpty) nodes.select(col("node"), col("node").as("scc_id"))
-    else found.reduce(_ unionByName _)
+    else {
+      releaseRound(nodes)
+      found.reduce(_ unionByName _)
+    }
   }
 
   /** Bow-tie decomposition (Broder et al., "Graph structure in the
@@ -651,39 +640,6 @@ object Components {
           .otherwise(lit("other")).as("component"))
       .groupBy("component").agg(count(lit(1)).as("n_nodes"))
       .orderBy("component")
-  }
-
-  /** Checkpoint + RESET PLAN STATISTICS. `localCheckpoint` alone
-    * intentionally carries the parent plan's estimated stats into the
-    * LogicalRDD leaf — correct for one-shot plans, catastrophic for a
-    * fixpoint whose round joins the state frame WITH ITSELF: the
-    * estimated sizeInBytes then compounds (product of children per
-    * join), its DIGIT COUNT multiplying every round, until Catalyst
-    * burns hours multiplying million-digit BigIntegers inside
-    * SizeInBytesOnlyStatsPlanVisitor (observed: graph_msf hung 20+
-    * minutes at sf0.01 purely in driver-side BigInteger.multiply).
-    * Re-anchoring through createDataFrame(rdd, schema) drops the
-    * inherited estimate so every round re-plans from the default
-    * leaf size. Costs one InternalRow→Row conversion on access —
-    * only used on the component/label frames, never the edge data. */
-  private def ckptFresh(df: DataFrame): DataFrame = {
-    val ck = df.localCheckpoint(true)
-    ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
-  }
-
-  /** [[releaseRound]] for a [[ckptFresh]] frame: its leaf is the
-    * re-anchored RDD, so the checkpoint to unpersist is the first
-    * persisted RDD down that leaf's lineage. Same contract: only once
-    * every consumer has been materialized. */
-  private def releaseFresh(df: DataFrame): Unit = {
-    def persisted(r: org.apache.spark.rdd.RDD[_]): Option[org.apache.spark.rdd.RDD[_]] =
-      if (r.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE) Some(r)
-      else r.dependencies.headOption.flatMap(d => persisted(d.rdd))
-    try if (!df.sparkSession.sparkContext.isStopped)
-      df.queryExecution.analyzed.collectFirst {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-      }.flatMap(persisted).foreach(_.unpersist(false))
-    catch { case _: Exception => () }
   }
 
   /** Minimum spanning forest by BORŮVKA's algorithm — the canonical
@@ -761,40 +717,9 @@ object Components {
           if (forest == null) picked.localCheckpoint(true)
           else forest.unionByName(picked).distinct().localCheckpoint(true)
         if (prevForest != null) releaseRound(prevForest)
-        // merge picked components over the pick graph (one edge per
-        // component — comp-count-sized, already carried in m)
-        val h = pickedW.select("x", "y")
-        // Merge the picked components. The pick graph has AT MOST one
-        // edge per surviving component, so after round 0 it shrinks
-        // geometrically; when it fits the driver comfortably the merge
-        // is an exact min-root union-find collected once (2 jobs total
-        // vs 2 jobs PER pointer-jump round — the inner loop was half
-        // the operator's wall clock, all job latency on ≤5000-row
-        // frames). The distributed pointer-jump loop remains the
-        // billion-component scale path; both produce the min label per
-        // merged group (union-find exactly, the bounded loop whenever
-        // pick chains are shorter than 2^innerRounds — always in
-        // practice, and the regime the oracle's fixed unroll pins).
-        val hCnt = h.count()
-        val onDriver = hCnt <= driverMergeCap
-        val lab: DataFrame =
-          if (onDriver) {
-            // Driver fast path — NOT an exact union-find: it emulates
-            // the distributed innerRounds-bounded pointer-jump below
-            // step for step (synchronous l ← min(l, min-neighbor-l,
-            // l(l)) with early stop on a stable round), so a pick
-            // chain longer than 2^innerRounds collapses PARTIALLY here
-            // exactly as it does distributed and in the oracle's fixed
-            // unroll — same labels, same budget, 2 Spark jobs instead
-            // of 2 per inner round (MsfMergeParitySpec pins driver ≡
-            // distributed on a >2^innerRounds chain).
-            val edgesArr = h.collect().map(r => (r.getLong(0), r.getLong(1)))
-            val lmap = driverBoundedMerge(edgesArr, innerRounds)
-            val spark = g.sparkSession
-            val sqlImplicits = spark.implicits
-            import sqlImplicits._
-            broadcast(spark.createDataset(lmap.toSeq).toDF("c", "l"))
-          } else distributedBoundedMerge(h, innerRounds)
+        // merge the picked components over the pick graph (one edge
+        // per component — comp-count-sized, already carried in m)
+        val lab = mergePicks(pickedW.select("x", "y"), innerRounds)
         // contract: relabel endpoints (components without a pick keep
         // their label — the left join's coalesce), drop intra-component
         // edges, keep the cheapest original edge per new component pair
@@ -817,7 +742,7 @@ object Components {
         // superseded, this round's picks or a distributed merge's labels
         releaseRound(prevG)
         releaseRound(pickedW)
-        if (!onDriver) releaseFresh(lab)
+        releaseRound(lab)
       }
       round += 1
     }
@@ -831,99 +756,27 @@ object Components {
     }
   }
 
-  /** The distributed innerRounds-bounded min-label pointer-jump over a
-    * pick graph `h(x, y)` — synchronous l ← min(l, min-neighbor-l,
-    * l(l)) per round with early stop on a stable round (a no-op under
-    * the oracle's fixed unroll, since labels only decrease). Package-
-    * visible so MsfMergeParitySpec can pin it against the driver
-    * emulation on a chain longer than 2^innerRounds. */
-  private[graft] def distributedBoundedMerge(h: DataFrame,
-      innerRounds: Int): DataFrame = {
-    val hs = ckptFresh(
-      h.unionByName(h.select(col("y").as("x"), col("x").as("y")))
-        .repartition(1))
-    var labD = ckptFresh(h.select(col("x").as("c"))
-      .unionByName(h.select(col("y").as("c"))).distinct()
-      .select(col("c"), col("c").as("l")).repartition(1))
-    var labStable = false
-    var inner = 0
-    // labels only decrease, so one unchanged round is a true
-    // inner fixpoint — further rounds are no-ops (what the
-    // oracle's fixed unroll replays)
-    while (inner < innerRounds && !labStable) {
-      val viaNbr = hs.join(labD.select(col("c").as("y"), col("l").as("ln")),
-          Seq("y"))
-        .groupBy(col("x").as("c")).agg(min(col("ln")).as("nm"))
-      val viaJump = labD.as("p")
-        .join(labD.select(col("c").as("pl"), col("l").as("lj")),
-          col("p.l") === col("pl"))
-        .select(col("p.c").as("c"), col("lj"))
-      val wide = ckptFresh(labD
-        .join(viaNbr, Seq("c"), "left")
-        .join(viaJump, Seq("c"), "left")
-        .select(col("c"), col("l").as("prev"),
-          least(col("l"), coalesce(col("nm"), col("l")),
-            coalesce(col("lj"), col("l"))).as("l"))
-        .repartition(1))
-      labStable = wide.filter(col("l") < col("prev")).isEmpty
-      releaseFresh(labD)
-      labD = wide.select("c", "l")
-      inner += 1
+  /** MSF's merge: `rounds` pointer-jumped [[minLabels]] rounds over
+    * the symmetric pick graph h(x, y), as (c, l). The pick graph has at
+    * most one edge per surviving component, so after round 0 it
+    * shrinks geometrically; when it fits under the broadcast threshold
+    * ([[bounded]]) the same rounds run on the driver
+    * ([[LocalGraph.minLabels]]), one job instead of two per round.
+    * Both stop at the same round, so a pick chain longer than
+    * 2^rounds collapses PARTIALLY on both, exactly as in the oracle's
+    * fixed unroll (MsfMergeParitySpec). */
+  private[graft] def mergePicks(h: DataFrame, rounds: Int): DataFrame =
+    bounded(h).fold {
+      val probe = h.select(col("x").as("a"), col("y").as("b"))
+        .unionByName(h.select(col("y").as("a"), col("x").as("b")))
+      minLabels(probe, identityLabels(probe), jump = true, rounds)._1
+        .select(col("node").as("c"), col("l"))
+    } { rows =>
+      val (x, y) = (rows.map(_.getLong(0)), rows.map(_.getLong(1)))
+      val g = LocalGraph.Csr(x ++ y, y ++ x)
+      val l = LocalGraph.minLabels(g, rounds, jump = true)
+      val spark = h.sparkSession
+      import spark.implicits._
+      broadcast(g.ids.indices.map(i => (g.ids(i), g.ids(l(i)))).toDF("c", "l"))
     }
-    releaseFresh(hs)
-    labD
-  }
-
-  /** Admission cap for the driver-side merge fast path, DERIVED from
-    * the driver heap instead of a fixed row count (r9 verdict #7).
-    * The steady-state cost is ~128 B/edge (boxed (Long, Long) tuple
-    * array plus the label-table entries), but the PEAK is ~3× that:
-    * `collect()` materializes the Array[Row] (boxed fields), the
-    * mapped tuple array coexists with it, and the fetched task-result
-    * buffers are still live — so the budget models 384 B/edge against
-    * 1/8 of max heap (equivalently 128 B against 1/24): an 8 GiB
-    * driver admits ~2.7M edges, a 1 GiB test JVM ~350k; anything
-    * larger takes the distributed pointer-jump path (identical
-    * labels, MsfMergeParitySpec). Floor of 64k keeps tiny-heap test
-    * runs on the fast path for the trivial graphs they use. */
-  private[graph] def driverMergeCap: Long =
-    math.max(65536L, Runtime.getRuntime.maxMemory / 8L / 384L)
-
-  /** Driver-side emulation of [[distributedBoundedMerge]]: the SAME
-    * synchronous bounded recursion (min of own label, neighbor labels,
-    * label-of-label; early stop on a stable round) on in-heap maps —
-    * NOT an exact union-find, so a >2^innerRounds pick chain collapses
-    * partially here exactly as it does distributed / in the oracle's
-    * fixed unroll. Keeps minSpanningForest's driver fast path at 2
-    * Spark jobs while preserving the bounded-budget parity contract. */
-  private[graft] def driverBoundedMerge(edges: Array[(Long, Long)],
-      innerRounds: Int): scala.collection.Map[Long, Long] = {
-    import scala.collection.mutable
-    val adj = mutable.HashMap.empty[Long, mutable.ArrayBuffer[Long]]
-    def add(a: Long, b: Long): Unit =
-      adj.getOrElseUpdate(a, mutable.ArrayBuffer.empty[Long]) += b
-    edges.foreach { case (x, y) => add(x, y); add(y, x) }
-    var lab = mutable.HashMap.empty[Long, Long]
-    adj.keysIterator.foreach(c => lab(c) = c)
-    var stable = false
-    var inner = 0
-    while (inner < innerRounds && !stable) {
-      val next = mutable.HashMap.empty[Long, Long]
-      stable = true
-      adj.foreach { case (c, ns) =>
-        var m = lab(c)
-        var i = 0
-        while (i < ns.length) {
-          val ln = lab(ns(i)); if (ln < m) m = ln; i += 1
-        }
-        val lj = lab.getOrElse(lab(c), lab(c))
-        if (lj < m) m = lj
-        if (m < lab(c)) stable = false
-        next(c) = m
-      }
-      lab = next
-      inner += 1
-    }
-    lab
-  }
 }

@@ -22,7 +22,9 @@ import graft.functions.KeyedMemo
   *    [[Traversal.recursionTrails]]);
   *  - [[recursion]] is [[Traversal.recursion]]'s walk-count DP;
   *  - [[recursionGroups]] is [[Neighborhood.recursionGroups]]'s
-  *    per-start reach, mutual pairs and bounded min-label rounds.
+  *    per-start reach, mutual pairs and bounded min-label rounds;
+  *  - [[minLabels]] is [[Components.minLabels]]'s round loop, for
+  *    those groups and for the MSF merge.
   * The two DataFrame entry points return `None` when the edge frame or
   * the start set is over the cap (or the threshold is `-1`), and their
   * callers then run the distributed rounds.
@@ -226,6 +228,32 @@ private[graft] object LocalGraph {
     n
   }
 
+  /** [[Components.minLabels]] on the driver, over `g`'s node indices
+    * (index order is id order, so the min index is the min id): each
+    * round node i takes the min of three labels of the round before,
+    * its own, those of its out-neighbours and, with `jump`, the label
+    * of its label. Stops at the first round that lowers no label, or
+    * after `rounds`. Returns each index's label index. */
+  def minLabels(g: Csr, rounds: Int, jump: Boolean): Array[Int] = {
+    var label = Array.range(0, g.size)
+    var changed = true
+    var round = 0
+    while (changed && round < rounds) {
+      val next = label.clone()
+      var v = 0
+      while (v < g.size) {
+        var k = g.start(v)
+        while (k < g.start(v + 1)) { next(v) = math.min(next(v), label(g.nbr(k))); k += 1 }
+        if (jump) next(v) = math.min(next(v), label(label(v)))
+        v += 1
+      }
+      changed = !java.util.Arrays.equals(next, label)
+      label = next
+      round += 1
+    }
+    label
+  }
+
   /** The (src, dst) adjacency of each edge frame, collected once per
     * frame and threshold when it fits ([[bounded]]); `None` is kept
     * too, so a frame over the cap pays its capped collect once. An
@@ -284,8 +312,8 @@ private[graft] object LocalGraph {
     * schema: per scope node its reach within `maxDepth` hops, the
     * scope pairs that reach each other, then `ccRounds` synchronous
     * min-label rounds over the pair graph that stop at the first round
-    * that changes no label, as [[Components.labelPropagation]] runs
-    * them. `None` when the edges or the scope are over the cap. */
+    * that changes no label ([[minLabels]]), as
+    * [[Components.labelPropagation]] runs them. `None` when the edges or the scope are over the cap. */
   def recursionGroups(edges: DataFrame, scope: DataFrame, maxDepth: Int,
       ccRounds: Int): Option[DataFrame] = for {
     g <- adjacency(edges)
@@ -309,20 +337,7 @@ private[graft] object LocalGraph {
     val a = mutual.map(p => g.ids((p >>> 32).toInt))
     val b = mutual.map(p => g.ids(p.toInt))
     val pg = Csr(a ++ b, b ++ a)
-    var label = Array.range(0, pg.size)
-    var changed = true
-    var round = 0
-    while (changed && round < ccRounds) {
-      val next = label.clone()
-      (0 until pg.size).foreach { v =>
-        (pg.start(v) until pg.start(v + 1)).foreach { k =>
-          if (label(pg.nbr(k)) < next(v)) next(v) = label(pg.nbr(k))
-        }
-      }
-      changed = !java.util.Arrays.equals(next, label)
-      label = next
-      round += 1
-    }
+    val label = minLabels(pg, ccRounds, jump = false)
     val size = label.groupBy(identity).view.mapValues(_.length.toLong).toMap
     // a pair end is least/greatest(start, reached node); with no round
     // run, the distributed reach is the scope itself

@@ -3,6 +3,7 @@ package graft.graph
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession.knob
 import graft.functions.FrameMemo
 import graft.functions.KeyedFrameMemo.{iterate, releaseRound}
 
@@ -678,9 +679,8 @@ object Ranking {
     // aggregate spill capacity via GRAFT_BW_CELL_BUDGET /
     // -Dgraft.bw.cell.budget.)
     val nEdges = eAll.count()
-    val cellBudget: Long = sys.props.get("graft.bw.cell.budget")
-      .orElse(sys.env.get("GRAFT_BW_CELL_BUDGET"))
-      .map(_.toLong).getOrElse(600000000L)
+    val cellBudget: Long = knob("graft.bw.cell.budget",
+      "GRAFT_BW_CELL_BUDGET").getOrElse(600000000L)
     val nChunks = math.max(1,
       math.ceil(nEdges.toDouble * allSrcIds.length / cellBudget).toInt)
     if (nChunks == 1) betweennessSweep(eAll, allSrcIds, maxDepth)
@@ -1263,9 +1263,8 @@ object Ranking {
         .as("p"))
       .groupBy(col("p.a").as("a"), col("p.b").as("b"))
       .agg(count(lit(1)).as("n_shared"))
-    val pairBudget: Long = sys.props.get("graft.cooc.pair.budget")
-      .orElse(sys.env.get("GRAFT_COOC_PAIR_BUDGET"))
-      .map(_.toLong).getOrElse(1000000000L)
+    val pairBudget: Long = knob("graft.cooc.pair.budget",
+      "GRAFT_COOC_PAIR_BUDGET").getOrElse(1000000000L)
     val worst = pairs.count().toDouble * (maxItemDeg - 1).toDouble / 2
     if (worst <= pairBudget.toDouble)
       pairCounts(pi).filter(col("n_shared") >= minShared)

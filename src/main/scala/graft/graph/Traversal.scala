@@ -3,6 +3,7 @@ package graft.graph
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession.knob
 import graft.functions.FrameMemo
 import graft.functions.KeyedFrameMemo.releaseRound
 
@@ -255,7 +256,7 @@ object Traversal {
     * same budget made self-tuning, not a new policy. */
   private[graft] def chunkCellBudget(prop: String, env: String,
       bytesPerCell: Double, default: Long): Long =
-    sys.props.get(prop).orElse(sys.env.get(env)).map(_.toLong).getOrElse {
+    knob(prop, env).getOrElse {
       val dir = sys.props.get("spark.local.dir")
         .orElse(sys.env.get("SPARK_LOCAL_DIRS"))
         .getOrElse(System.getProperty("java.io.tmpdir"))

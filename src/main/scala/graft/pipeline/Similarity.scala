@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession.knob
 import graft.functions.{TopKAgg, VectorOps}
 import graft.functions.KeyedFrameMemo.iterate
 
@@ -839,9 +840,8 @@ object Similarity {
         rnd(VectorOps.dotLong(col("qa"), col("qb")) / (col("na") * col("nb")), 4))
       .filter(col("cosine") >= threshold)
       .select(col("doc_a"), col("doc_b"), col("cosine"))
-    val pairBudget: Long = sys.props.get("graft.emb.pair.budget")
-      .orElse(sys.env.get("GRAFT_EMB_PAIR_BUDGET"))
-      .map(_.toLong).getOrElse(200000000L)
+    val pairBudget: Long = knob("graft.emb.pair.budget",
+      "GRAFT_EMB_PAIR_BUDGET").getOrElse(200000000L)
     // Sufficient check BEFORE any signature work: even if every vector
     // landed in ONE bucket a band yields n·(n−1)/2 pairs, so
     // B·n·(n−1)/2 ≤ budget proves the single-pass branch safe from one
@@ -856,9 +856,8 @@ object Similarity {
     // (64 quantized longs + raw floats + norm + hash-table overhead),
     // two sides live at once → heap/16, clamped well under Spark's
     // 8 GB BroadcastExchange hard limit
-    val broadcastVecMaxRows: Long = sys.props.get("graft.emb.bcast.rows")
-      .orElse(sys.env.get("GRAFT_EMB_BCAST_ROWS")).map(_.toLong)
-      .getOrElse(math.min(Runtime.getRuntime.maxMemory / 16L, 3500000000L) / 800L)
+    val broadcastVecMaxRows: Long = knob("graft.emb.bcast.rows",
+      "GRAFT_EMB_BCAST_ROWS").getOrElse(math.min(Runtime.getRuntime.maxMemory / 16L, 3500000000L) / 800L)
     if (bands.toDouble * nIn.toDouble * (nIn - 1).toDouble / 2 <= pairBudget.toDouble)
       rerank(candidatesRaw(bb).distinct(), identity)
         .orderBy("doc_a", "doc_b")

@@ -15,7 +15,7 @@ import graft.graph.Components
   * rows. Compiles are counted with Spark's own `CodegenMetrics`
   * (one count per class Janino compiles, i.e. per cache miss).
   */
-class CodegenReuseSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CodegenReuseSpec extends AnyFunSuite with BeforeAndAfterAll with BroadcastOff {
   lazy val spark: SparkSession = GraftSession.local(4)
 
   private def compiled: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
@@ -57,24 +57,50 @@ class CodegenReuseSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("MSF merge: a second call compiles no class") {
     // a 600-node chain is longer than 2^8, so all 8 inner rounds run.
-    // Broadcast is off here: every join input of a chain this short is
-    // small, and AQE broadcasts whichever side's stage finished first,
-    // so a warm call can plan a join differently from a cold one (2
-    // classes more). With the join strategy fixed, the merge's own
-    // plans compile each class once.
+    // Broadcast is off here, so the merge runs its distributed loop
+    // (Components.minLabels) rather than the driver kernel.
     val s = spark
     import s.implicits._
     val h = (0L until 599L).map(i => (i, i + 1)).toDF("x", "y")
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "-1")
-    try {
-      val (first, _) = call(Components.distributedBoundedMerge(h, 8))
-      val (second, n) = call(Components.distributedBoundedMerge(h, 8))
+    withoutBroadcast {
+      val (first, _) = call(Components.mergePicks(h, 8))
+      val (second, n) = call(Components.mergePicks(h, 8))
       assert(first.size == 600)
-      assert(n == 0, s"second distributedBoundedMerge compiled $n classes")
+      assert(n == 0, s"second MSF merge compiled $n classes")
       assert(second == first)
-    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+  }
+
+  test("min-label loop at Spark defaults: warm calls compile no class") {
+    // every input of a 600-node chain's rounds is small enough to
+    // broadcast; each join of the loop hints its label side, so AQE
+    // cannot plan a warm call's join differently from a cold one's
+    val s = spark
+    import s.implicits._
+    val probe = (0L until 599L).flatMap(i => Seq((i, i + 1), (i + 1, i))).toDF("a", "b")
+    val start = (0L until 600L).map(i => (i, i)).toDF("node", "l")
+    def loop = Components.minLabels(probe, start, jump = true, 8)._1
+    val (first, _) = call(loop)
+    (1 to 3).foreach { i =>
+      val (again, n) = call(loop)
+      assert(n == 0, s"warm call $i compiled $n classes")
+      assert(again == first)
+    }
+  }
+
+  test("stronglyConnected: a second call compiles no class") {
+    // two cycles joined by a bridge, a tail chain into them and a
+    // 64-node cycle: trim waves, two outer rounds and both colourings
+    val s = spark
+    import s.implicits._
+    val edges = (Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L), (5L, 6L), (6L, 5L),
+      (7L, 8L), (8L, 1L)) ++ (100L until 164L).map(i => (i, 100L + (i + 1) % 64)))
+      .toDF("src", "dst")
+    val (first, _) = call(Components.stronglyConnected(edges))
+    val (second, n) = call(Components.stronglyConnected(edges))
+    assert(first.size == 72)
+    assert(n == 0, s"second stronglyConnected compiled $n classes")
+    assert(second == first)
   }
 
   test("board queries: second calls compile no class, past Spark's default cache size") {

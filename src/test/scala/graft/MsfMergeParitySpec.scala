@@ -1,27 +1,37 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.graph.Components
 
 /** Pins the bounded-budget parity contract of minSpanningForest's
-  * merge phase: the driver fast path must be a step-for-step emulation
-  * of the distributed innerRounds-bounded pointer-jump (NOT an exact
-  * union-find), so that a pick chain longer than 2^innerRounds
-  * collapses PARTIALLY — identically on the driver, distributed, and
-  * in the oracle's fixed unroll. */
-class MsfMergeParitySpec extends AnyFunSuite {
+  * merge phase: the driver kernel (`LocalGraph.minLabels`) must run
+  * the distributed loop's innerRounds-bounded pointer-jump rounds
+  * step for step (NOT an exact union-find), so that a pick chain
+  * longer than 2^innerRounds collapses PARTIALLY — identically on the
+  * driver, distributed (`Components.minLabels`), and in the oracle's
+  * fixed unroll. */
+class MsfMergeParitySpec extends AnyFunSuite with BroadcastOff {
   lazy val spark: SparkSession = GraftSession.local(4)
 
+  /** Does the plan read a checkpoint, as the distributed loop's does? */
+  private def checkpointed(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.collectFirst { case r: LogicalRDD => r }.isDefined
+
+  /** The merge's labels on the driver (the pick graph fits under the
+    * session's broadcast threshold) and distributed (threshold -1). */
   private def labelsOf(edges: Seq[(Long, Long)], innerRounds: Int)
       : (Map[Long, Long], Map[Long, Long]) = {
     import spark.implicits._
     val h = edges.toDF("x", "y")
-    val dist = Components.distributedBoundedMerge(h, innerRounds)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val drv = Components.driverBoundedMerge(edges.toArray, innerRounds).toMap
-    (drv, dist)
+    def labels(df: DataFrame) = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val driver = Components.mergePicks(h, innerRounds)
+    val dist = withoutBroadcast(Components.mergePicks(h, innerRounds))
+    assert(!checkpointed(driver), "the driver kernel did not run")
+    assert(checkpointed(dist), "threshold -1 did not force the distributed loop")
+    (labels(driver), labels(dist))
   }
 
   test("driver merge ≡ distributed merge on a chain longer than 2^innerRounds") {

@@ -120,13 +120,38 @@ class RoundLifecycleSpec extends AnyFunSuite with PersistedRdds with BroadcastOf
   test("minSpanningForest") {
     keepsOneRound(graph(), 0)(Components.minSpanningForest(_, "weight"))
   }
-  test("distributedBoundedMerge keeps only its labels") {
+  test("minSpanningForest, over the cap") {
+    withoutBroadcast(keepsOneRound(graph(), 0)(Components.minSpanningForest(_, "weight")))
+  }
+  test("minLabels keeps only its labels (the MSF merge over the cap)") {
     val s = spark
     import s.implicits._
     val h = (0L until 40L).map(i => (i, i + 1)).toDF("x", "y")
     val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    val labels = Components.distributedBoundedMerge(h, 8)
+    val labels = withoutBroadcast(Components.mergePicks(h, 8))
     assert(labels.collect().length == 41)
     assert(persistedSince(before).size == 1, s"persisted: ${persistedSince(before)}")
+  }
+
+  // the convergent min-label loop (Components.minLabels) keeps the
+  // same rule for each of its callers
+  test("labelPropagation") {
+    keepsOneRound(graph(), 0)(Components.labelPropagation(_))
+  }
+  test("stronglyConnected keeps only its result's checkpoints") {
+    // the result is a union of per-extraction checkpoints; besides
+    // them, only the two prepared-edge memos of the input stay
+    val input = graph()
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    var result = Components.stronglyConnected(input)
+    assert(result.collect().length == 60)
+    val read = result.queryExecution.analyzed.collect { case lr: LogicalRDD => lr.rdd.id }.toSet
+    val left = persistedSince(before)
+    assert(read.nonEmpty && read.subsetOf(left.keySet), s"the result reads $read of $left")
+    assert((left -- read).size == 2, s"persisted besides the result: ${left -- read}")
+    KeyedFrameMemo.release(input)
+    assert(persistedSince(before).keySet == read, "the rest were memos of the input")
+    result = null
+    assertReleased(before)
   }
 }

@@ -88,6 +88,81 @@ class SccSpec extends AnyFunSuite {
     assert(got == bruteScc(e))
   }
 
+  /** A cycle 0 → 1 → … → n−1 → 0. */
+  private def cycle(n: Long): Seq[(Long, Long)] = (0L until n).map(i => (i, (i + 1) % n))
+
+  test("a 64-node cycle is one SCC") {
+    assert(run(cycle(64)) == (0L until 64L).map(_ -> 0L).toMap)
+  }
+
+  test("a 1024-node cycle is one SCC") {
+    assert(run(cycle(1024)) == (0L until 1024L).map(_ -> 0L).toMap)
+  }
+
+  /** Eight 6-node rings, alternately rising and falling along their
+    * edges, each ring's last node feeding the next ring's first and
+    * the eighth feeding the first: one 48-node SCC {0..75}. */
+  private val rings: Seq[(Long, Long)] = (0 until 8).flatMap { k =>
+    def ring(k: Int) = {
+      val ids = (0L until 6L).map(_ + 10L * k)
+      if (k % 2 == 0) ids else ids.reverse
+    }
+    val r = ring(k)
+    (r :+ r.head).sliding(2).map(p => (p(0), p(1))).toSeq :+ (r.last, ring((k + 1) % 8).head)
+  }
+
+  test("cycle of cycles: a 48-node SCC and a tail chain") {
+    val e = rings ++ Seq((200L, 201L), (201L, 3L))
+    val want = bruteScc(e)
+    assert(want.values.count(_ == 0L) == 48)
+    assert(run(e) == want)
+  }
+
+  test("cycle of cycles with a larger-id cycle downstream: one round per hop backward") {
+    // every node of the big SCC reaches the falling 5-cycle {100..104},
+    // so the backward colouring first labels the SCC with a node of
+    // that cycle, which never reaches the root: its jumps stop helping
+    // and the root's label moves one hop per round (~43 rounds)
+    import spark.implicits._
+    val e = rings ++ Seq((104L, 103L), (103L, 102L), (102L, 101L), (101L, 100L), (100L, 104L),
+      (75L, 104L))
+    val m = budgetError(e, maxOuter = 10, maxInner = 40)
+    assert(m.contains("backward colouring"))
+    val got = Components.stronglyConnected(e.toDF("src", "dst"), maxInner = 60)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got == bruteScc(e))
+  }
+
+  // a used-up budget raises: partial colours would give wrong scc_ids,
+  // and an unfinished outer loop would drop the remaining nodes
+  private def budgetError(e: Seq[(Long, Long)], maxOuter: Int, maxInner: Int): String = {
+    import spark.implicits._
+    intercept[IllegalStateException](Components.stronglyConnected(
+      e.toDF("src", "dst"), maxOuter = maxOuter, maxInner = maxInner).collect()).getMessage
+  }
+
+  test("stronglyConnected: a used-up forward colouring budget raises an error") {
+    val m = budgetError(cycle(64), maxOuter = 10, maxInner = 2)
+    assert(m.contains("stronglyConnected") && m.contains("forward colouring") &&
+      m.contains("maxInner = 2"))
+  }
+
+  test("stronglyConnected: a used-up backward colouring budget raises an error") {
+    // 0 calls every node, so the forward colouring settles in 2 rounds;
+    // the backward one needs ~log2(64) rounds to carry the root's label
+    val m = budgetError(cycle(64) ++ (1L until 64L).map(0L -> _), maxOuter = 10, maxInner = 3)
+    assert(m.contains("stronglyConnected") && m.contains("backward colouring") &&
+      m.contains("maxInner = 3"))
+  }
+
+  test("stronglyConnected: a used-up outer budget raises an error") {
+    // {5,6} is hidden behind {2,3} until that SCC is extracted
+    val e = Seq((10L, 11L), (11L, 10L), (11L, 2L), (2L, 3L), (3L, 2L),
+      (3L, 5L), (5L, 6L), (6L, 5L))
+    val m = budgetError(e, maxOuter = 1, maxInner = 40)
+    assert(m.contains("stronglyConnected") && m.contains("maxOuter = 1"))
+  }
+
   /** Ground truth MSF: Kruskal with (w, a, b) tie-break — union-find
     * over the same undirected dedup the operator performs. */
   private def bruteMsf(edges: Seq[(Long, Long, Long)]): Set[(Long, Long, Long)] = {

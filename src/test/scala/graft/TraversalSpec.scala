@@ -140,6 +140,14 @@ class TraversalSpec extends AnyFunSuite with BroadcastOff {
     }
   }
 
+  test("alternatingStar: a used-up round budget raises an error") {
+    import spark.implicits._
+    // one round cannot contract a 10-hop path to its star forest
+    val path = (0L until 10L).map(i => (i, i + 1)).toDF("src", "dst")
+    val e = intercept[IllegalStateException](Components.alternatingStar(path, maxRounds = 1))
+    assert(e.getMessage.contains("alternatingStar") && e.getMessage.contains("maxRounds = 1"))
+  }
+
   test("address parse/normalize matches reference semantics") {
     import spark.implicits._
     val df = Seq("0x1000", "0X00001000", "4096", "abcd", "ABCD", "xyz", "")
